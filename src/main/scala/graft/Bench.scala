@@ -45,11 +45,6 @@ object Bench {
       case _ => -1L
     }
 
-  /** Nonzero iff any key errored — the process exit policy, factored
-    * out so the spec can assert it without forking a JVM. */
-  private[graft] def exitCode(errors: Map[String, String]): Int =
-    if (errors.isEmpty) 0 else 1
-
   // the plan-diagnostic summary per query: counts of the operators a
   // plan flip would change (join strategies, exchanges, the custom
   // top-k). NOTE the capture point honestly: count() below runs its
@@ -145,18 +140,6 @@ object Bench {
   private def fmt(entries: Iterable[(String, Double)]): String =
     entries.map { case (k, v) => "\"" + k + "\":" + num(v) }
       .mkString("{", ",", "}")
-  // JSON string escape for error messages (quotes/control chars appear
-  // in Spark exception text routinely)
-  private def jstr(s: String): String = "\"" + s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   /** Errored keys carry time-to-THROW, not query time — folding them
     * into min/median/total would let a partially-failed artifact read
     * as a complete measurement (r13 ADVICE). They keep their raw
@@ -202,31 +185,16 @@ object Bench {
         "\"" + k + "\":[" + rs.map(r => num(f(r))).mkString(",") + "]"
       }.mkString("{", ",", "}")
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, m) => jstr(k) + ":" + jstr(m) }.mkString("{", ",", "}")
+      .map { case (k, m) => Verify.jstr(k) + ":" + Verify.jstr(m) }.mkString("{", ",", "}")
     val total = if (times.nonEmpty) times.map(_._2).sum else 0.0
     s"""{"metric":"total","value":${num(total)},"unit":"sec","n_queries":${results.size},"n_timed":${times.size},"queries":${fmt(times)},"median":${fmt(medians)},"runs":${lists(_.sec)},"gc_sec":${lists(_.gcSec)},"proc_cpu_sec":${lists(_.cpuSec)},"loadavg1":${lists(_.load1)},"plans":$plans,"errors":$errJson,"sf":"$sfDir"}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_full.json")
     val only = args.toSet
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // broadcast/shuffle cleanup is GC-driven (ContextCleaner); on a
-      // large heap a 79-query sequence accumulates dead broadcasts for
-      // minutes and later queries pay the memory pressure
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // same at-scale posture as Verify: runtime bloom-filter join
-      // pruning on (gated to a no-op at fixture scale by the
-      // application-side scan threshold)
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // warm-up actions so JVM/codegen/parquet-reader initialization
     // isn't billed to whichever query happens to iterate first
     // (measured ~2 s on the first real query otherwise)
@@ -246,13 +214,13 @@ object Bench {
     val times = minTimes(results, errors)
     val total = if (times.nonEmpty) times.map(_._2).sum else 0.0
     val head = times.filter(r => headline.contains(r._1)).toMap
-    val errKeys = errors.keys.toSeq.sorted.map(jstr).mkString("[", ",", "]")
+    val errKeys = errors.keys.toSeq.sorted.map(Verify.jstr).mkString("[", ",", "]")
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec","queries":${fmt(head)},"n_queries":${results.size},"n_timed":${times.size},"n_errors":${errors.size},"errors":$errKeys,"full":"$outPath","sf":"$sfDir"}""")
     spark.stop()
     if (errors.nonEmpty) {
       System.err.println(s"[bench] FAILED: ${errors.size} key(s) errored: " +
         errors.keys.toSeq.sorted.mkString(", "))
-      sys.exit(exitCode(errors))
+      sys.exit(Verify.exitCode(errors))
     }
   }
 }

@@ -10,7 +10,7 @@ import java.nio.file.{Files, Paths}
   * nonzero — the r11 drift lesson (38 events keys died silently under
   * rc:0). HarnessSpec pins the contract by injecting a broken key. */
 object Verify {
-  /** Nonzero iff any key errored — shared exit policy with Bench. */
+  /** Nonzero iff any key errored — the exit policy of Verify and Bench. */
   private[graft] def exitCode(errors: Map[String, String]): Int =
     if (errors.isEmpty) 0 else 1
 
@@ -44,7 +44,8 @@ object Verify {
   // JSON string escape: backslash, quote, and ALL control chars (<0x20)
   // — a tab or CR in builder-authored SQL would otherwise make the
   // driver's json.load fail and silently zero the round's correctness.
-  private def q(s: String): String = "\"" + s.flatMap {
+  // Bench escapes its error messages with the same function.
+  private[graft] def jstr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
     case '\n' => "\\n"
@@ -58,30 +59,15 @@ object Verify {
     val Array(sfDir, outDir) = args.take(2)
     // optional extra args: run only these keys (dev loop; driver passes none)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      // runtime row-level bloom filters: thin the fact side of a
-      // shuffle join BEFORE its exchange when the other side is
-      // selective (off by default on this build). A no-op at fixture
-      // scale — the application-side 10 GB scan threshold gates it —
-      // but the right posture at 100 TB; injection behavior is pinned
-      // in ScaleProbeSpec with the threshold lowered.
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     val errors = runAll(spark, sfDir, outDir,
       SparkEntry.queries.filter(qr => only.isEmpty || only(qr._1)))
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jstr(k)}: ${jstr(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     val errJson = errors.toSeq.sortBy(_._1)
-      .map { case (k, m) => s"${q(k)}: ${q(m)}" }.mkString("{", ",", "}")
+      .map { case (k, m) => s"${jstr(k)}: ${jstr(m)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/errors.json"), errJson)
     spark.stop()
     if (errors.nonEmpty) {

@@ -162,8 +162,8 @@ object TextOps {
       d: String): (String, String) = mhProbeIndexes.synchronized {
     // a memo hit must ALSO be visible in THIS session's catalog:
     // bucketed tables live in the session's SharedState, and a fresh
-    // session built after clearDefaultSession (the test suites'
-    // withExtSession) gets a NEW SharedState with an empty catalog —
+    // session built after clearDefaultSession (the test suite's
+    // TestSpark.stock) gets a NEW SharedState with an empty catalog —
     // so validate and rebuild rather than hand out dangling names.
     // In the driver's Bench/Verify runs there is one session, so the
     // build still happens exactly once.

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev-only: write ScaleProbeSpec's 100k CLUSTERED vector corpus
   * (64 true cells × 1600 members, 64 dims, noise 0.04, near-dup pairs
@@ -61,10 +61,7 @@ object ClusteredGen {
     val noise = if (args.length > 1) args(1).toDouble else 0.04
     val vecs = corpus(noise)
     val (cells, n) = (64, vecs.length)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     import spark.implicits._
     spark.sparkContext.parallelize(vecs.toIndexedSeq, 32)
       .toDF("vec_id", "embedding", "label")

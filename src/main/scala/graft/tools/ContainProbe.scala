@@ -1,8 +1,7 @@
 package graft.tools
 
 import graft.api.{Checkpoints, Dedup}
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, Tables}
 
 /** Dev-only probe (r22): where does the shuffle-posture containment
   * join spend its time — candidate stage (chunked prefix ⋈ postings +
@@ -11,11 +10,7 @@ import org.apache.spark.sql.SparkSession
 object ContainProbe {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     spark.range(1000).selectExpr("sum(id)").collect()
     def t(label: String)(f: => Long): Unit = {
       val t0 = System.nanoTime(); val r = f

@@ -1,8 +1,7 @@
 package graft.tools
 
 import graft.api.{Checkpoints, Dedup}
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, Tables}
 
 /** Dev-only: DEDICATED pair bench for the containment posture twins —
   * the trap-11 method that adjudicated the jaccard twins: both
@@ -13,10 +12,7 @@ import org.apache.spark.sql.SparkSession
   * operator summary. */
 object ContainmentPairBench {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(32)
     for (d <- args) {
       def run(bc: Boolean): (Double, Long, String) = {
         val t0 = System.nanoTime()

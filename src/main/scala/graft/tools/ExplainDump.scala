@@ -1,24 +1,17 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /** Dev-only: write `explain("formatted")` output for the given keys to
   * `<outDir>/<key>_<suffix>.txt` — the before/after plan evidence the
   * optimization rounds commit under plans/rNN/.
   * Usage: runMain graft.tools.ExplainDump <sfDir> <outDir> <suffix> key...
-  * Session mirrors Bench (local[$SPARK_GRAFT_CPUS], shuffle.partitions =
-  * cpus, Graft extensions, runtime bloom on) so the dumped plan is the
-  * plan the bench actually runs. */
+  * The session is GraftSession's (Bench's posture), so the dumped plan
+  * is the plan the bench runs; the plans/rNN dumps were taken with
+  * SPARK_GRAFT_CPUS=32. */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, keys @ _*) = args: @unchecked
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     keys.foreach { k =>
       val df = graft.SparkEntry.queries(k)(spark, sfDir)

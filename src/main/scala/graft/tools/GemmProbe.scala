@@ -1,5 +1,6 @@
 package graft.tools
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.functions.Kernels
 
@@ -8,10 +9,7 @@ import graft.functions.Kernels
   * float-encoder vs double-cast encoder, fanout on/off, row counts. */
 object GemmProbe {
   def main(args: Array[String]): Unit = {
-    val s = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
+    val s = GraftSession(32)
     import s.implicits._
     val W = graft.ml.MlOps.weightsK
     val bcW = s.sparkContext.broadcast(W)

@@ -1,7 +1,8 @@
 package graft.tools
 
+import graft.GraftSession
 import graft.api.GraphOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: REAL graph-growth measurement for the iterative graph
@@ -21,7 +22,7 @@ import org.apache.spark.sql.functions._
   * Self-loops dropped by the operators; weights 1 + (j·31 + c) % 9
   * where c is the row's monotonically_increasing_id mod 4 —
   * deterministic for a FIXED partition layout (spark.range at
-  * local[32], this tool's hardcoded master), which is the committed
+  * local[32], this tool's fixed core count), which is the committed
   * artifact's reproduction condition; a different core count permutes
   * some weights (topology and timing shape are unaffected — weights
   * only feed the min-plus/LPA label arithmetic).
@@ -33,11 +34,7 @@ object GraphScaleBench {
     require(args.length >= 2, "usage: GraphScaleBench <nodes> <outJson>")
     val n = args(0).toLong
     val outJson = args(1)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(32)
     import spark.implicits._
 
     val edges = spark.range(n).select(col("id").as("j"))

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: materialize a LONG-TAIL-vocabulary `documents` fixture —
@@ -29,10 +29,7 @@ object LongTailGen {
     val outDir = args(0)
     val nDocs = if (args.length > 1) args(1).toLong else 50000L
     val tailPool = if (args.length > 2) args(2).toInt else 1000000
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     val base = spark.range(nDocs).select(col("id").as("doc_id"),
       // 20-40 distinct-ish tokens, 15% hot / 85% tail; array_distinct
       // because hash collisions may repeat a token within a doc

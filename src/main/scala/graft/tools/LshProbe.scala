@@ -1,19 +1,15 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.api.Dedup
 import graft.functions.Kernels
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only probe: end-to-end timing + plan of minhashPairs. */
 object LshProbe {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     def t[A](label: String)(f: => A): A = {
       val t0 = System.nanoTime(); val r = f
       println(f"STAGE $label%-28s ${(System.nanoTime() - t0) / 1e9}%8.2f s  -> $r")

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.Tables
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, Tables}
 import org.apache.spark.sql.functions._
 
 /** Dev probe: why does a shipdate range predicate (not) prune row
@@ -9,12 +8,7 @@ import org.apache.spark.sql.functions._
   * filters, the scan metrics, and the per-file footer stats. */
 object MinMaxProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(8)
     val base = Tables.lineitem(spark, "/root/testdata/sf0.001")
       .select("l_orderkey", "l_quantity", "l_shipdate")
     val variants: Seq[(String, org.apache.spark.sql.DataFrame, org.apache.spark.sql.Column)] = Seq(

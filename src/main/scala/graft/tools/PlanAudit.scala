@@ -1,14 +1,9 @@
 package graft.tools
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 /** Dev-only: assert the physical-plan shapes we rely on at scale. */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val d = args.headOption.getOrElse("/root/testdata/sf0.01")
     def plan(k: String): String =
       graft.SparkEntry.queries(k)(spark, d).queryExecution.executedPlan.toString

@@ -1,7 +1,7 @@
 package graft.tools
 
 import graft.api.Similarity
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only (r18): IVF-PQ recall on a clustered corpus across
@@ -12,11 +12,7 @@ import org.apache.spark.sql.functions._
   * Truth = brute-force cosine top-5 (sim_knn_per_query's shape). */
 object PqScaleProbe {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(32)
     val d = args(0)
     val e = graft.Tables.embeddings(spark, d)
     val truth = graft.SparkEntry.queries("sim_knn_per_query")(spark, d)

@@ -1,7 +1,6 @@
 package graft.tools
 
-import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
 /** Dev-only: the per-round ANN/MinHash QUALITY measurement —
   * `runMain graft.tools.RecallProbe <sfDir>` runs every approximate
@@ -30,11 +29,7 @@ object RecallProbe {
     // "knn-only": skip the MinHash families (for corpora that carry
     // only an embeddings table, e.g. the ClusteredGen synthetic)
     val knnOnly = args.length > 1 && args(1) == "knn-only"
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(32)
 
     def pairs(key: String): Set[(Long, Long)] =
       SparkEntry.queries(key)(spark, sfDir)

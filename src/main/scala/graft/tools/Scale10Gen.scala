@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: materialize a deterministic ~10× `documents` fixture for
@@ -25,10 +25,7 @@ object Scale10Gen {
     // the token salt changes the gram distribution, so their growth
     // law must compare salted-1x to salted-10x, not raw sf0.1
     val nReplicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     val docs = graft.Tables.documents(spark, sfDir)
     val replicas = (0 until nReplicas).map { k =>
       docs.select(

@@ -1,6 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.GraftSession
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Dev-only: the FULL-surface 10× fixture for the scale-growth bench —
@@ -48,10 +49,7 @@ object Scale10GenAll {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
     val nReplicas = if (args.length > 2) args(2).toInt else 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(32)
     val B = 1000000000L // big-key offset unit (orderkey, doc_id, vec_id)
     val M = 1000000L    // dim-key offset unit (cust/supp/part keys)
 

@@ -1,8 +1,7 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
+import graft.{GraftSession, SparkEntry, Tables}
 import graft.api.Similarity
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: audits the [[Similarity.routedNprobe]] measured gate —
@@ -24,11 +23,7 @@ import org.apache.spark.sql.functions._
 object SignalProbe {
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: SignalProbe <embeddingsDir> [dir...]")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(32)
     for (d <- args) {
       val e = Tables.embeddings(spark, d)
       val cents = Similarity.trainCodebook(e, "vec_id", "embedding", k = 16)

@@ -1,8 +1,8 @@
 package graft.tools
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 import graft.streaming.{GraftEvent, StreamOps}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-only: the streaming THROUGHPUT / STATE measurement —
@@ -33,13 +33,9 @@ object StreamScaleBench {
     val sfDir = args(0)
     val filesPerTrigger = if (args.length > 1) args(1).toInt else 2
     val nFiles = 16
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession(32)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
 
     val ev = Tables.events(spark, sfDir)

@@ -1,91 +1,66 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SparkSessionExtensions wiring: functions resolvable without manual
-  * registration, and the size(split) → TokenCount rewrite firing. */
+  * registration, and the size(split) → TokenCount rewrite firing. The
+  * suite session carries the extensions; answers are compared against
+  * TestSpark.stock, which does not. */
 class ExtensionsSpec extends AnyFunSuite {
 
-  /** A session with graft.GraftExtensions applied, sharing the suite's
-    * SparkContext (clearing the default session forces getOrCreate to
-    * build a fresh SessionState that honors spark.sql.extensions). */
-  private def withExtSession[A](f: SparkSession => A): A = {
-    TestSpark.spark // ensure the shared context exists
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
-    SparkSession.clearDefaultSession()
-    SparkSession.clearActiveSession()
-    try {
-      // withExtensions, not config(): spark.sql.extensions is a STATIC
-      // conf read from the SparkContext's conf at session build — on a
-      // pre-existing context (fresh JVMs like Bench/Verify set the
-      // config normally) only the builder hook can attach extensions
-      val s = SparkSession.builder()
-        .withExtensions(new GraftExtensions())
-        .getOrCreate()
-      f(s)
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
-    }
-  }
-
   test("graft functions are registered by the extension (SQL text, no register call)") {
-    withExtSession { s =>
-      val r = s.sql(
-        """SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
-          |                    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
-          |       graft_jaccard(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS j,
-          |       graft_token_count('a b  c ') AS t""".stripMargin).head()
-      assert(r.getDouble(0) == 1.0)
-      assert(r.getDouble(1) == 0.5)
-      assert(r.getInt(2) == 5) // 'a','b','','c','' — java split keep-trailing
-    }
+    val s = TestSpark.spark
+    val r = s.sql(
+      """SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
+        |                    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
+        |       graft_jaccard(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS j,
+        |       graft_token_count('a b  c ') AS t""".stripMargin).head()
+    assert(r.getDouble(0) == 1.0)
+    assert(r.getDouble(1) == 0.5)
+    assert(r.getInt(2) == 5) // 'a','b','','c','' — java split keep-trailing
   }
 
   test("filter(row_number <= k) plans as TopKPerGroupExec and matches the window result") {
-    withExtSession { s =>
-      val q = SparkEntry.queries("window_topk_per_group")
-      val df = q(s, TestSpark.sf0001)
-      val physical = df.queryExecution.executedPlan.toString
-      // the exec node prints without its Exec suffix; assert it replaced
-      // the Window (no Window/Sort-on-group below the final orderBy)
-      assert(physical.contains("TopKPerGroup"),
-        s"top-k rewrite did not reach the physical plan:\n$physical")
-      assert(!physical.contains("Window ["),
-        s"stock Window still present:\n$physical")
-      val got = df.collect().map(_.toString).toSeq
-      val want = q(TestSpark.spark, TestSpark.sf0001).collect().map(_.toString).toSeq
-      assert(got == want)
-    }
+    val s = TestSpark.spark
+    val q = SparkEntry.queries("window_topk_per_group")
+    val df = q(s, TestSpark.sf0001)
+    val physical = df.queryExecution.executedPlan.toString
+    // the exec node prints without its Exec suffix; assert it replaced
+    // the Window (no Window/Sort-on-group below the final orderBy)
+    assert(physical.contains("TopKPerGroup"),
+      s"top-k rewrite did not reach the physical plan:\n$physical")
+    assert(!physical.contains("Window ["),
+      s"stock Window still present:\n$physical")
+    val got = df.collect().map(_.toString).toSeq
+    // the reference is the stock Window plan, so it needs stock Spark
+    val stock = q(TestSpark.stock, TestSpark.sf0001)
+    val stockPlan = stock.queryExecution.executedPlan.toString
+    assert(!stockPlan.contains("TopKPerGroup") && stockPlan.contains("Window"),
+      s"stock session planned the rewrite:\n$stockPlan")
+    assert(got == stock.collect().map(_.toString).toSeq)
   }
 
   test("row_number == 1 (not <=) keeps the stock Window plan") {
-    withExtSession { s =>
-      val physical = SparkEntry.queries("text_lang_id")(s, TestSpark.sf0001)
-        .queryExecution.executedPlan.toString
-      assert(!physical.contains("TopKPerGroup"))
-      assert(physical.contains("Window"))
-    }
+    val s = TestSpark.spark
+    val physical = SparkEntry.queries("text_lang_id")(s, TestSpark.sf0001)
+      .queryExecution.executedPlan.toString
+    assert(!physical.contains("TopKPerGroup"))
+    assert(physical.contains("Window"))
   }
 
   test("size(split(text, ' ')) is rewritten to TokenCount and agrees with the built-in") {
-    withExtSession { s =>
-      val docs = Tables.documents(s, TestSpark.sf0001)
-        .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
-      val optimized = docs.queryExecution.optimizedPlan.toString
-      assert(optimized.contains("tokencount") || optimized.contains("TokenCount"),
-        s"rewrite did not fire:\n$optimized")
-      // value parity vs the un-rewritten built-in on the plain session
-      val expected = Tables.documents(TestSpark.spark, TestSpark.sf0001)
-        .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
-        .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      val got = docs.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
-      assert(got == expected)
-    }
+    val s = TestSpark.spark
+    val docs = Tables.documents(s, TestSpark.sf0001)
+      .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
+    val optimized = docs.queryExecution.optimizedPlan.toString
+    assert(optimized.contains("tokencount") || optimized.contains("TokenCount"),
+      s"rewrite did not fire:\n$optimized")
+    // value parity vs the un-rewritten built-in on stock Spark
+    val expected = Tables.documents(TestSpark.stock, TestSpark.sf0001)
+      .select(col("doc_id"), size(split(col("text"), " ")).as("n_tok"))
+      .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    val got = docs.collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
+    assert(got == expected)
   }
 }

@@ -2,6 +2,8 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, size, split}
+import scala.jdk.CollectionConverters._
 
 /** The fail-loudly contract for the two driver-run mains (r12 judge #1):
   * a key that throws must surface in the error map AND flip the exit
@@ -45,8 +47,8 @@ class HarnessSpec extends AnyFunSuite {
     assert(badRuns.forall(_.err.isDefined))
     val okRuns = results.toMap.apply("ok_key")
     assert(okRuns.forall(_.err.isEmpty) && okRuns.forall(_.plan != "ERROR"))
-    assert(Bench.exitCode(errs) == 1)
-    assert(Bench.exitCode(Map.empty) == 0)
+    // Bench exits through Verify's exit policy
+    assert(Verify.exitCode(errs) == 1)
   }
 
   test("bench artifact: errored keys out of timing aggregates; load context present") {
@@ -77,5 +79,40 @@ class HarnessSpec extends AnyFunSuite {
     assert(m.get("loadavg1").get("ok_key").get(0).asDouble >= 0.0,
       "loadavg sample should be readable on this platform")
     assert(m.get("proc_cpu_sec").get("ok_key").get(0).asDouble >= 0.0)
+  }
+
+  test("the suite session runs GraftSession's posture: rewrites, UTC, runtime bloom") {
+    // no wrapper session: the shared suite session itself plans with the
+    // rules Verify and Bench plan with
+    val topk = SparkEntry.queries("window_topk_per_group")(spark, sf)
+      .queryExecution.executedPlan.toString
+    assert(topk.contains("TopKPerGroup"), s"top-k rewrite missing:\n$topk")
+    val tokens = Tables.documents(spark, sf).select(size(split(col("text"), " ")))
+      .queryExecution.optimizedPlan.toString
+    assert(tokens.toLowerCase.contains("tokencount"), s"TokenCount rewrite missing:\n$tokens")
+    // the posture pins the zone, so no main answers in the host's zone ...
+    val posture = GraftSession.confs(4).toMap
+    assert(posture.get("spark.sql.session.timeZone").contains("UTC"))
+    assert(posture.get("spark.sql.optimizer.runtime.bloomFilter.enabled").contains("true"))
+    // ... is what the suite session carries
+    assert(spark.sparkContext.master == "local[4]")
+    posture.foreach { case (k, v) =>
+      assert(spark.sparkContext.getConf.get(k) == v, s"$k differs from the posture")
+    }
+  }
+
+  test("SparkSession is built only in GraftSession and TestSpark.stock") {
+    // split literal, so this file does not match itself
+    val call = java.util.regex.Pattern.quote("SparkSession" + ".builder()").r
+    val hits = Seq("src/main", "src/test").flatMap { dir =>
+      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }.flatMap { p =>
+      val n = call.findAllIn(java.nio.file.Files.readString(p)).size
+      if (n == 0) None else Some(p.getFileName.toString -> n)
+    }.toMap
+    assert(hits == Map("GraftSession.scala" -> 1, "TestSpark.scala" -> 1),
+      s"a session is built outside GraftSession: $hits")
   }
 }

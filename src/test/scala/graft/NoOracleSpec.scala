@@ -346,6 +346,27 @@ class NoOracleSpec extends AnyFunSuite {
     assert(math.abs(after.last - 1.0) < 1e-12, s"ladder must end at 1.0: ${after.last}")
   }
 
+  test("probeRecallLadder(p-1) is the recall of ivfKnn(nprobe = p) against ivfKnn(nprobe = all cells)") {
+    // the ladder runs its own truth join; pin it to the probe path it
+    // predicts, on the ladder's own md5-ordered query sample
+    import org.apache.spark.sql.functions.{col, md5}
+    val sim = graft.api.Similarity
+    val e = Tables.embeddings(spark, sf)
+    val cents = sim.trainCodebook(e, "vec_id", "embedding", k = 16)
+    val ladder = sim.probeRecallLadder(e, "vec_id", "embedding", cents)
+    val qids = e.select(col("vec_id").cast("long").as("q"))
+      .orderBy(md5(col("q").cast("string")), col("q"))
+      .limit(sim.LadderSamples).collect().map(_.getLong(0))
+    def probe(nprobe: Int): Set[(Long, Long)] =
+      sim.ivfKnn(e, "vec_id", "embedding", col("vec_id").isin(qids: _*), k = 5,
+          centroids = cents, nprobe = nprobe)
+        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val truth = probe(cents.length)
+    assert(truth.size == sim.LadderSamples * 5)
+    val recalls = (1 to cents.length).map(p => probe(p).count(truth.contains).toDouble / truth.size)
+    assert(recalls == ladder.toSeq, s"ladder ${ladder.toSeq} vs probed recall $recalls")
+  }
+
   test("sim_knn_pca: 16-dim shortlist-100 recall vs brute-force top-5, and re-ranked sims are exact") {
     val exact = SparkEntry.queries("sim_knn_per_query")(spark, sf)
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap

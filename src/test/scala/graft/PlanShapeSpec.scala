@@ -104,83 +104,76 @@ class PlanShapeSpec extends AnyFunSuite {
   )
 
   test("ml_crossval_linreg: one fact scan per pass — the stats branch is pinned") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "ml_crossval_linreg")
-      val scans = "lineitem\\.parquet".r.findAllIn(p).length
-      assert(scans == 1,
-        s"expected exactly 1 lineitem FileScan (stats pinned + 1 scoring pass), got $scans:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "ml_crossval_linreg")
+    val scans = "lineitem\\.parquet".r.findAllIn(p).length
+    assert(scans == 1,
+      s"expected exactly 1 lineitem FileScan (stats pinned + 1 scoring pass), got $scans:\n$p")
   }
 
   test("text_bpe_merge_candidates: the pair explode runs over the vocab aggregate, not the corpus") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "text_bpe_merge_candidates")
-      // printed top-down: pair Generate … vocab HashAggregate … token
-      // Generate — an aggregate BETWEEN the two generates proves the
-      // pair explode's input is the distinct-word table
-      val firstGen = p.indexOf("Generate explode(transform")
-      val tokenGen = p.indexOf("Generate explode(split")
-      assert(firstGen >= 0 && tokenGen > firstGen,
-        s"expected pair-transform Generate above the token-split Generate:\n$p")
-      assert(p.substring(firstGen, tokenGen).contains("HashAggregate"),
-        s"no aggregate between the pair explode and the token explode — " +
-          s"pairs are exploding per corpus token, not per distinct word:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "text_bpe_merge_candidates")
+    // printed top-down: pair Generate … vocab HashAggregate … token
+    // Generate — an aggregate BETWEEN the two generates proves the
+    // pair explode's input is the distinct-word table
+    val firstGen = p.indexOf("Generate explode(transform")
+    val tokenGen = p.indexOf("Generate explode(split")
+    assert(firstGen >= 0 && tokenGen > firstGen,
+      s"expected pair-transform Generate above the token-split Generate:\n$p")
+    assert(p.substring(firstGen, tokenGen).contains("HashAggregate"),
+      s"no aggregate between the pair explode and the token explode — " +
+        s"pairs are exploding per corpus token, not per distinct word:\n$p")
   }
 
   test("dedup_near_jaccard_shuffle pins the no-broadcast 100TB posture") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "dedup_near_jaccard_shuffle")
-      assert(p.contains("ShuffledHashJoin"),
-        s"expected SHUFFLE_HASH-pinned joins in the no-broadcast posture:\n$p")
-      assert(!p.contains("BroadcastHashJoin"),
-        s"a corpus-sized side got broadcast despite the pinned posture:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "dedup_near_jaccard_shuffle")
+    assert(p.contains("ShuffledHashJoin"),
+      s"expected SHUFFLE_HASH-pinned joins in the no-broadcast posture:\n$p")
+    assert(!p.contains("BroadcastHashJoin"),
+      s"a corpus-sized side got broadcast despite the pinned posture:\n$p")
   }
 
   test("dedup_containment_shuffle pins the no-broadcast 100TB posture") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "dedup_containment_shuffle")
-      assert(p.contains("ShuffledHashJoin"),
-        s"expected SHUFFLE_HASH-pinned joins in the no-broadcast posture:\n$p")
-      assert(!p.contains("BroadcastHashJoin"),
-        s"a corpus-sized side got broadcast despite the pinned posture:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "dedup_containment_shuffle")
+    assert(p.contains("ShuffledHashJoin"),
+      s"expected SHUFFLE_HASH-pinned joins in the no-broadcast posture:\n$p")
+    assert(!p.contains("BroadcastHashJoin"),
+      s"a corpus-sized side got broadcast despite the pinned posture:\n$p")
   }
 
   test("join_bloom_prefilter probes the bloom at the fact scan, before the exchange") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "join_bloom_prefilter")
-      assert(p.contains("graft_bloom_probe"),
-        s"expected the bloom probe predicate in the plan:\n$p")
-      // the probe must run BELOW the semi-join: find the Filter line
-      // carrying it and assert a lineitem scan sits underneath with no
-      // intervening join — textually, the probe appears after the last
-      // join operator mention in the bottom-up printed plan
-      val probeIdx = p.indexOf("graft_bloom_probe")
-      val scanIdx = p.indexOf("lineitem.parquet")
-      assert(scanIdx > probeIdx,
-        s"bloom probe should sit directly above the lineitem scan:\n$p")
-      assert(!p.substring(probeIdx, scanIdx).contains("Join"),
-        s"a join operator sits between the bloom probe and the fact scan — " +
-          s"the pre-filter is not pre:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "join_bloom_prefilter")
+    assert(p.contains("graft_bloom_probe"),
+      s"expected the bloom probe predicate in the plan:\n$p")
+    // the probe must run BELOW the semi-join: find the Filter line
+    // carrying it and assert a lineitem scan sits underneath with no
+    // intervening join — textually, the probe appears after the last
+    // join operator mention in the bottom-up printed plan
+    val probeIdx = p.indexOf("graft_bloom_probe")
+    val scanIdx = p.indexOf("lineitem.parquet")
+    assert(scanIdx > probeIdx,
+      s"bloom probe should sit directly above the lineitem scan:\n$p")
+    assert(!p.substring(probeIdx, scanIdx).contains("Join"),
+      s"a join operator sits between the bloom probe and the fact scan — " +
+        s"the pre-filter is not pre:\n$p")
   }
 
   test("dedup_minhash_probe_only joins are pinned broadcast like the persisted twin") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "dedup_minhash_probe_only")
-      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
-        s"probe-only LSH plan fell back to a shuffle join:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "dedup_minhash_probe_only")
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
+      s"probe-only LSH plan fell back to a shuffle join:\n$p")
   }
 
   shapeChecks.foreach { case (k, pat, why) =>
     test(s"$k plan contains ${pat.takeWhile(_ != ' ')} ($why)") {
-      TestSpark.withExtSession { s =>
-        val p = plan(s, k)
-        assert(pat.split('|').exists(p.contains), s"expected [$pat] in plan:\n$p")
-      }
+      val s = TestSpark.spark
+      val p = plan(s, k)
+      assert(pat.split('|').exists(p.contains), s"expected [$pat] in plan:\n$p")
     }
   }
 
@@ -190,14 +183,13 @@ class PlanShapeSpec extends AnyFunSuite {
     // historical window and touch the raw events parquet only for the
     // delta — if a second raw scan ever appears, the incremental cost
     // model is silently broken
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "agg_incremental_merge")
-      def count(sub: String) = p.sliding(sub.length).count(_ == sub)
-      assert(count("events.parquet") == 1,
-        s"expected exactly one raw events scan (the delta), plan:\n$p")
-      assert(count("graft_agg_partials") == 1,
-        s"expected exactly one partial-table scan, plan:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "agg_incremental_merge")
+    def count(sub: String) = p.sliding(sub.length).count(_ == sub)
+    assert(count("events.parquet") == 1,
+      s"expected exactly one raw events scan (the delta), plan:\n$p")
+    assert(count("graft_agg_partials") == 1,
+      s"expected exactly one partial-table scan, plan:\n$p")
   }
 
   test("events ts predicates push to the parquet scan through the NTZ cast wrapper") {
@@ -231,236 +223,223 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("dedup_minhash_lsh joins are pinned broadcast — no shuffle join can appear") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "dedup_minhash_lsh")
-      assert(!p.contains("SortMergeJoin"), s"minhash plan fell back to SMJ:\n$p")
-      assert(!p.contains("ShuffledHashJoin"), s"minhash plan fell back to SHJ:\n$p")
-      val bhj = "BroadcastHashJoin".r.findAllIn(p).size
-      assert(bhj >= 3, s"expected bucket + 2 verify joins broadcast, got $bhj BHJs:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "dedup_minhash_lsh")
+    assert(!p.contains("SortMergeJoin"), s"minhash plan fell back to SMJ:\n$p")
+    assert(!p.contains("ShuffledHashJoin"), s"minhash plan fell back to SHJ:\n$p")
+    val bhj = "BroadcastHashJoin".r.findAllIn(p).size
+    assert(bhj >= 3, s"expected bucket + 2 verify joins broadcast, got $bhj BHJs:\n$p")
   }
 
   test("dedup_incremental_minhash joins are pinned broadcast too") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "dedup_incremental_minhash")
-      assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
-        s"incremental LSH plan fell back to a shuffle join:\n$p")
-      assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
-        s"expected bucket + 2 verify joins broadcast:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "dedup_incremental_minhash")
+    assert(!p.contains("SortMergeJoin") && !p.contains("ShuffledHashJoin"),
+      s"incremental LSH plan fell back to a shuffle join:\n$p")
+    assert("BroadcastHashJoin".r.findAllIn(p).size >= 3,
+      s"expected bucket + 2 verify joins broadcast:\n$p")
   }
 
   test("de-BNLJ'd plans stay nested-loop-free (embedding family + banded ranks)") {
-    TestSpark.withExtSession { s =>
-      // r8 flagged sim_knn_bruteforce as the one declared key planning
-      // a BroadcastNestedLoopJoin; the exact top-k now rides the
-      // threshold descent, the cell-pair admission test moved
-      // driver-side (≤ |cells|² work on a table the driver already
-      // holds), and bandedRanks' grand total rides the band window
-      // instead of a scalar cross join — none of these may regress
-      Seq("sim_knn_bruteforce", "dedup_embed_cosine",
-          "dedup_embed_incremental", "window_ranks").foreach { k =>
-        val p = plan(s, k)
-        assert(!p.contains("BroadcastNestedLoopJoin"),
-          s"$k plans a nested-loop join:\n$p")
-        assert(!p.contains("CartesianProduct"), s"$k plans a cartesian product:\n$p")
-      }
+    val s = TestSpark.spark
+    // r8 flagged sim_knn_bruteforce as the one declared key planning
+    // a BroadcastNestedLoopJoin; the exact top-k now rides the
+    // threshold descent, the cell-pair admission test moved
+    // driver-side (≤ |cells|² work on a table the driver already
+    // holds), and bandedRanks' grand total rides the band window
+    // instead of a scalar cross join — none of these may regress
+    Seq("sim_knn_bruteforce", "dedup_embed_cosine",
+        "dedup_embed_incremental", "window_ranks").foreach { k =>
+      val p = plan(s, k)
+      assert(!p.contains("BroadcastNestedLoopJoin"),
+        s"$k plans a nested-loop join:\n$p")
+      assert(!p.contains("CartesianProduct"), s"$k plans a cartesian product:\n$p")
     }
   }
 
   test("jaccard-family joins are pinned broadcast — no shuffle join can appear") {
-    TestSpark.withExtSession { s =>
-      // the exact-dedup pipeline (PPJoin df/candidate/verify joins) and
-      // the keep_best cluster lookup were the last stats-derived joins
-      // in the dedup family — r6's dedup_keep_best regression read
-      // through exactly this gap (an SMJ appearing after a checkpoint
-      // erased the stats). Every one of these plans must now hold its
-      // pinned-broadcast shape at any stats regime.
-      Seq("dedup_near_jaccard", "dedup_ngram_jaccard", "dedup_incremental",
-          "dedup_clusters", "dedup_keep_best").foreach { k =>
-        val p = plan(s, k)
-        assert(!p.contains("SortMergeJoin"), s"$k plan fell back to SMJ:\n$p")
-        assert(!p.contains("ShuffledHashJoin"), s"$k plan fell back to SHJ:\n$p")
-      }
+    val s = TestSpark.spark
+    // the exact-dedup pipeline (PPJoin df/candidate/verify joins) and
+    // the keep_best cluster lookup were the last stats-derived joins
+    // in the dedup family — r6's dedup_keep_best regression read
+    // through exactly this gap (an SMJ appearing after a checkpoint
+    // erased the stats). Every one of these plans must now hold its
+    // pinned-broadcast shape at any stats regime.
+    Seq("dedup_near_jaccard", "dedup_ngram_jaccard", "dedup_incremental",
+        "dedup_clusters", "dedup_keep_best").foreach { k =>
+      val p = plan(s, k)
+      assert(!p.contains("SortMergeJoin"), s"$k plan fell back to SMJ:\n$p")
+      assert(!p.contains("ShuffledHashJoin"), s"$k plan fell back to SHJ:\n$p")
     }
   }
 
   test("jaccard family (broadcastJoins=false) plans every join as an equi-shuffle") {
-    TestSpark.withExtSession { s =>
-      val docs = Tables.documents(s, TestSpark.sf0001)
-      val isNew = org.apache.spark.sql.functions.substring(
-        org.apache.spark.sql.functions.md5(col("doc_id").cast("string").cast("binary")),
-        1, 1) >= "d"
-      Seq(
-        graft.api.Dedup.nearJaccardPairs(docs, "doc_id", "text", 0.8,
-          Some("lang"), broadcastJoins = false),
-        graft.api.Dedup.jaccardPairsAgainstIndex(docs.filter(isNew), docs.filter(!isNew),
-          "doc_id", "text", 0.8, Some("lang"), broadcastJoins = false)
-      ).foreach { df =>
-        val p = df.queryExecution.executedPlan.toString
-        assert(p.contains("ShuffledHashJoin"), s"expected SHJ-hinted joins at scale:\n$p")
-        assert(!p.contains("BroadcastHashJoin"), s"scale setting must not broadcast:\n$p")
-        assert(!p.contains("SortMergeJoin"), s"scale setting must not sort-merge:\n$p")
-      }
+    val s = TestSpark.spark
+    val docs = Tables.documents(s, TestSpark.sf0001)
+    val isNew = org.apache.spark.sql.functions.substring(
+      org.apache.spark.sql.functions.md5(col("doc_id").cast("string").cast("binary")),
+      1, 1) >= "d"
+    Seq(
+      graft.api.Dedup.nearJaccardPairs(docs, "doc_id", "text", 0.8,
+        Some("lang"), broadcastJoins = false),
+      graft.api.Dedup.jaccardPairsAgainstIndex(docs.filter(isNew), docs.filter(!isNew),
+        "doc_id", "text", 0.8, Some("lang"), broadcastJoins = false)
+    ).foreach { df =>
+      val p = df.queryExecution.executedPlan.toString
+      assert(p.contains("ShuffledHashJoin"), s"expected SHJ-hinted joins at scale:\n$p")
+      assert(!p.contains("BroadcastHashJoin"), s"scale setting must not broadcast:\n$p")
+      assert(!p.contains("SortMergeJoin"), s"scale setting must not sort-merge:\n$p")
     }
   }
 
   test("join_skew_salted: derived salt factor >1 and plan-visible build replication") {
-    TestSpark.withExtSession { s =>
-      // hot key routes to 1 (an existing c_custkey) — keep in lockstep
-      // with the declared key so the answer-equality check below also
-      // covers the hot rows themselves
-      val probe = Tables.events(s, TestSpark.sf0001).select(
-        org.apache.spark.sql.functions.when(
-          org.apache.spark.sql.functions.pmod(col("user_id"),
-            org.apache.spark.sql.functions.lit(10)) < 7,
-          org.apache.spark.sql.functions.lit(1L))
-          .otherwise(org.apache.spark.sql.functions.pmod(col("user_id"),
-            org.apache.spark.sql.functions.lit(100))).as("route_id"),
-        col("event_id"), col("value"))
-      // the synthetic heavy hitter (~70% of rows on route 0) must
-      // derive a salt factor well above 1 from probe stats alone -
-      // ceil(maxKeyRows / (total/parts)) = ceil(0.7*total/(total/32))
-      val k = graft.api.SkewJoins.derivedSaltFactor(probe, "route_id")
-      assert(k > 1, s"uniform-looking stats? derived salt factor = $k")
-      // factor ~= ceil(measured hot fraction x shuffle.partitions) — at
-      // sf0.001 the hot key carries ~79% (user_id spans only 0..14, so
-      // ids 10-14 also route hot), NOT the nominal 70%; derive the
-      // expectation from the data so a partition-count or fixture
-      // change cannot break the test without a product change
-      val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val stats = probe.groupBy("route_id")
-        .agg(org.apache.spark.sql.functions.count(
-          org.apache.spark.sql.functions.lit(1)).as("n"))
-        .agg(org.apache.spark.sql.functions.max("n"),
-          org.apache.spark.sql.functions.sum("n")).collect()(0)
-      val hotFrac = stats.getLong(0).toDouble / stats.getLong(1)
-      assert(hotFrac > 0.5, s"fixture lost its heavy hitter: $hotFrac")
-      val expected = math.min(64, math.ceil(hotFrac * parts)).toInt
-      assert(math.abs(k - expected) <= 1,
-        s"expected ~$expected for a ${(hotFrac * 100).round}% hot key " +
-          s"at $parts partitions, got $k")
-      // and the salted join's physical plan must SHOW the replication:
-      // an explode Generate on the build side and _salt in the join key
-      val build = Tables.customer(s, TestSpark.sf0001)
-        .filter(col("c_custkey") < 100)
-        .select(col("c_custkey").as("route_id"), col("c_mktsegment"))
-      val joined = graft.api.SkewJoins.saltedJoinAuto(probe, build,
-        "route_id", "event_id")
-      val p = joined.queryExecution.executedPlan.toString
-      assert(p.contains("Generate explode"), s"no build-side replication in plan:\n$p")
-      assert(p.contains("_salt"), s"join does not include the salt key:\n$p")
-      // salting must be answer-invisible: identical (event_id, segment)
-      // multiset as the plain equi-join
-      val plain = probe.join(build, Seq("route_id"))
-      def rows(df: org.apache.spark.sql.DataFrame) =
-        df.select("event_id", "c_mktsegment").collect()
-          .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
-      assert(rows(joined) == rows(plain))
-    }
+    val s = TestSpark.spark
+    // hot key routes to 1 (an existing c_custkey) — keep in lockstep
+    // with the declared key so the answer-equality check below also
+    // covers the hot rows themselves
+    val probe = Tables.events(s, TestSpark.sf0001).select(
+      org.apache.spark.sql.functions.when(
+        org.apache.spark.sql.functions.pmod(col("user_id"),
+          org.apache.spark.sql.functions.lit(10)) < 7,
+        org.apache.spark.sql.functions.lit(1L))
+        .otherwise(org.apache.spark.sql.functions.pmod(col("user_id"),
+          org.apache.spark.sql.functions.lit(100))).as("route_id"),
+      col("event_id"), col("value"))
+    // the synthetic heavy hitter (~70% of rows on route 0) must
+    // derive a salt factor well above 1 from probe stats alone -
+    // ceil(maxKeyRows / (total/parts)) = ceil(0.7*total/(total/32))
+    val k = graft.api.SkewJoins.derivedSaltFactor(probe, "route_id")
+    assert(k > 1, s"uniform-looking stats? derived salt factor = $k")
+    // factor ~= ceil(measured hot fraction x shuffle.partitions) — at
+    // sf0.001 the hot key carries ~79% (user_id spans only 0..14, so
+    // ids 10-14 also route hot), NOT the nominal 70%; derive the
+    // expectation from the data so a partition-count or fixture
+    // change cannot break the test without a product change
+    val parts = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val stats = probe.groupBy("route_id")
+      .agg(org.apache.spark.sql.functions.count(
+        org.apache.spark.sql.functions.lit(1)).as("n"))
+      .agg(org.apache.spark.sql.functions.max("n"),
+        org.apache.spark.sql.functions.sum("n")).collect()(0)
+    val hotFrac = stats.getLong(0).toDouble / stats.getLong(1)
+    assert(hotFrac > 0.5, s"fixture lost its heavy hitter: $hotFrac")
+    val expected = math.min(64, math.ceil(hotFrac * parts)).toInt
+    assert(math.abs(k - expected) <= 1,
+      s"expected ~$expected for a ${(hotFrac * 100).round}% hot key " +
+        s"at $parts partitions, got $k")
+    // and the salted join's physical plan must SHOW the replication:
+    // an explode Generate on the build side and _salt in the join key
+    val build = Tables.customer(s, TestSpark.sf0001)
+      .filter(col("c_custkey") < 100)
+      .select(col("c_custkey").as("route_id"), col("c_mktsegment"))
+    val joined = graft.api.SkewJoins.saltedJoinAuto(probe, build,
+      "route_id", "event_id")
+    val p = joined.queryExecution.executedPlan.toString
+    assert(p.contains("Generate explode"), s"no build-side replication in plan:\n$p")
+    assert(p.contains("_salt"), s"join does not include the salt key:\n$p")
+    // salting must be answer-invisible: identical (event_id, segment)
+    // multiset as the plain equi-join
+    val plain = probe.join(build, Seq("route_id"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("event_id", "c_mktsegment").collect()
+        .map(r => (r.getLong(0), r.getString(1))).sorted.toSeq
+    assert(rows(joined) == rows(plain))
   }
 
   test("minhashPairs(broadcastJoins=false) plans every join as an equi-shuffle") {
-    TestSpark.withExtSession { s =>
-      val docs = Tables.documents(s, TestSpark.sf0001)
-      val p = graft.api.Dedup.minhashPairs(docs, "doc_id", "text", 0.8,
-        broadcastJoins = false).queryExecution.executedPlan.toString
-      assert(p.contains("ShuffledHashJoin"), s"expected SHJ-hinted joins at scale:\n$p")
-      assert(!p.contains("BroadcastHashJoin"), s"scale setting must not broadcast:\n$p")
-    }
+    val s = TestSpark.spark
+    val docs = Tables.documents(s, TestSpark.sf0001)
+    val p = graft.api.Dedup.minhashPairs(docs, "doc_id", "text", 0.8,
+      broadcastJoins = false).queryExecution.executedPlan.toString
+    assert(p.contains("ShuffledHashJoin"), s"expected SHJ-hinted joins at scale:\n$p")
+    assert(!p.contains("BroadcastHashJoin"), s"scale setting must not broadcast:\n$p")
   }
 
   test("sessionize is exactly one user-keyed shuffle; chunkFixed is shuffle-free") {
-    TestSpark.withExtSession { s =>
-      val p1 = graft.api.TimeSeriesOps.sessionize(
-        Tables.events(s, TestSpark.sf0001), "user_id", "event_id", "ts",
-        21600000000L).queryExecution.executedPlan.toString
-      assert("Exchange".r.findAllIn(p1).size == 1,
-        s"sessionize must shuffle once on the user key (lag, running sum, and " +
-          s"the (user, session) aggregate all reuse that partitioning):\n$p1")
-      val p2 = graft.api.TextAnalysis.chunkFixed(
-        Tables.documents(s, TestSpark.sf0001), "doc_id", "text", 64, 48)
-        .queryExecution.executedPlan.toString
-      assert(!p2.contains("Exchange"), s"chunkFixed must not shuffle:\n$p2")
-    }
+    val s = TestSpark.spark
+    val p1 = graft.api.TimeSeriesOps.sessionize(
+      Tables.events(s, TestSpark.sf0001), "user_id", "event_id", "ts",
+      21600000000L).queryExecution.executedPlan.toString
+    assert("Exchange".r.findAllIn(p1).size == 1,
+      s"sessionize must shuffle once on the user key (lag, running sum, and " +
+        s"the (user, session) aggregate all reuse that partitioning):\n$p1")
+    val p2 = graft.api.TextAnalysis.chunkFixed(
+      Tables.documents(s, TestSpark.sf0001), "doc_id", "text", 64, 48)
+      .queryExecution.executedPlan.toString
+    assert(!p2.contains("Exchange"), s"chunkFixed must not shuffle:\n$p2")
   }
 
   test("no CartesianProduct in any declared query plan except join_cross_small") {
-    TestSpark.withExtSession { s =>
-      val offenders = SparkEntry.queries.keys.toSeq.sorted
-        .filterNot(_ == "join_cross_small")
-        .filter(k => plan(s, k).contains("CartesianProduct"))
-      assert(offenders.isEmpty, s"unblocked cartesian products in: $offenders")
-    }
+    val s = TestSpark.spark
+    val offenders = SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(_ == "join_cross_small")
+      .filter(k => plan(s, k).contains("CartesianProduct"))
+    assert(offenders.isEmpty, s"unblocked cartesian products in: $offenders")
   }
 
   test("scan_partitioned_events prunes at the file index (non-empty PartitionFilters)") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "scan_partitioned_events")
-      // Spark 4.1.2's FileSourceScanLike.metadata prints the
-      // 'PartitionFilters: [...]' key on EVERY file scan, partitioned
-      // or not (empty brackets when nothing prunes) — so a bare
-      // contains("PartitionFilters: [") is vacuously true (r10 ADVICE).
-      // Assert the brackets actually CONTAIN the partition predicate on
-      // event_type, and that the isin moved OUT of the post-scan data
-      // filters: partition pruning means the other 3 types' files are
-      // never opened, not merely filtered after the read.
-      val partFilters = """PartitionFilters: \[([^\]]*)\]""".r
-        .findAllMatchIn(p).map(_.group(1)).toSeq
-      assert(partFilters.exists(f => f.nonEmpty && f.contains("event_type")),
-        s"expected a non-empty PartitionFilters entry on event_type, got " +
-          s"$partFilters in plan:\n$p")
-      val dataFilters = """(?:DataFilters|PushedFilters): \[([^\]]*)\]""".r
-        .findAllMatchIn(p).map(_.group(1)).toSeq
-      assert(!dataFilters.exists(_.contains("event_type")),
-        s"the event_type IN (...) predicate must prune partitions, not " +
-          s"linger as a data/pushed filter: $dataFilters in plan:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "scan_partitioned_events")
+    // Spark 4.1.2's FileSourceScanLike.metadata prints the
+    // 'PartitionFilters: [...]' key on EVERY file scan, partitioned
+    // or not (empty brackets when nothing prunes) — so a bare
+    // contains("PartitionFilters: [") is vacuously true (r10 ADVICE).
+    // Assert the brackets actually CONTAIN the partition predicate on
+    // event_type, and that the isin moved OUT of the post-scan data
+    // filters: partition pruning means the other 3 types' files are
+    // never opened, not merely filtered after the read.
+    val partFilters = """PartitionFilters: \[([^\]]*)\]""".r
+      .findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(partFilters.exists(f => f.nonEmpty && f.contains("event_type")),
+      s"expected a non-empty PartitionFilters entry on event_type, got " +
+        s"$partFilters in plan:\n$p")
+    val dataFilters = """(?:DataFilters|PushedFilters): \[([^\]]*)\]""".r
+      .findAllMatchIn(p).map(_.group(1)).toSeq
+    assert(!dataFilters.exists(_.contains("event_type")),
+      s"the event_type IN (...) predicate must prune partitions, not " +
+        s"linger as a data/pushed filter: $dataFilters in plan:\n$p")
   }
 
   test("scan_bucketed_join: join AND per-order agg ride the bucket layout exchange-free") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "scan_bucketed_join")
-      assert(p.contains("SortMergeJoin"),
-        s"bucketed fact-fact join must sort-merge:\n$p")
-      // the entire point of the key: neither the join nor the groupBy
-      // on the bucket key may re-shuffle either fact table — the ONLY
-      // shuffle allowed in the plan is the final presentation orderBy
-      // (a rangepartitioning exchange)
-      assert(!p.contains("Exchange hashpartitioning"),
-        s"bucketed join/agg still hash-shuffles:\n$p")
-      val shuffles = """Exchange (hash|range|Single)""".r.findAllIn(p).size
-      assert(shuffles <= 1,
-        s"expected at most the orderBy's range exchange, got $shuffles:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "scan_bucketed_join")
+    assert(p.contains("SortMergeJoin"),
+      s"bucketed fact-fact join must sort-merge:\n$p")
+    // the entire point of the key: neither the join nor the groupBy
+    // on the bucket key may re-shuffle either fact table — the ONLY
+    // shuffle allowed in the plan is the final presentation orderBy
+    // (a rangepartitioning exchange)
+    assert(!p.contains("Exchange hashpartitioning"),
+      s"bucketed join/agg still hash-shuffles:\n$p")
+    val shuffles = """Exchange (hash|range|Single)""".r.findAllIn(p).size
+    assert(shuffles <= 1,
+      s"expected at most the orderBy's range exchange, got $shuffles:\n$p")
   }
 
   test("sim_knn_ivf_persisted: probed cells dynamically prune the index scan") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "sim_knn_ivf_persisted")
-      // the persisted index is laid out one directory per cell; the
-      // probe must reach the FILE INDEX as a dynamic partition-pruning
-      // expression on the cell id (cells no query probes are never
-      // opened — the nprobe/|cells| read cost the layout exists for),
-      // and the candidate join must stay a broadcast equi-join
-      assert(p.contains("dynamicpruningexpression(_cell"),
-        s"index scan does not dynamically prune on the probed cells:\n$p")
-      assert(p.contains("BroadcastHashJoin"),
-        s"probe join must broadcast the query side:\n$p")
-      assert(p.contains("TopKPerGroup"),
-        s"per-query rank must take the bounded-heap operator:\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "sim_knn_ivf_persisted")
+    // the persisted index is laid out one directory per cell; the
+    // probe must reach the FILE INDEX as a dynamic partition-pruning
+    // expression on the cell id (cells no query probes are never
+    // opened — the nprobe/|cells| read cost the layout exists for),
+    // and the candidate join must stay a broadcast equi-join
+    assert(p.contains("dynamicpruningexpression(_cell"),
+      s"index scan does not dynamically prune on the probed cells:\n$p")
+    assert(p.contains("BroadcastHashJoin"),
+      s"probe join must broadcast the query side:\n$p")
+    assert(p.contains("TopKPerGroup"),
+      s"per-query rank must take the bounded-heap operator:\n$p")
   }
 
   test("scan_parquet_project_filter prunes columns at the scan (ReadSchema)") {
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "scan_parquet_project_filter")
-      // the query projects 5 of lineitem's 16 columns; the scan schema
-      // must carry none of the unprojected ones
-      assert(p.contains("ReadSchema"), s"no ReadSchema in plan:\n$p")
-      Seq("l_comment", "l_returnflag", "l_tax").foreach { c =>
-        assert(!p.contains(c + ":"), s"unpruned column $c reached the scan:\n$p")
-      }
+    val s = TestSpark.spark
+    val p = plan(s, "scan_parquet_project_filter")
+    // the query projects 5 of lineitem's 16 columns; the scan schema
+    // must carry none of the unprojected ones
+    assert(p.contains("ReadSchema"), s"no ReadSchema in plan:\n$p")
+    Seq("l_comment", "l_returnflag", "l_tax").foreach { c =>
+      assert(!p.contains(c + ":"), s"unpruned column $c reached the scan:\n$p")
     }
   }
 
@@ -468,13 +447,12 @@ class PlanShapeSpec extends AnyFunSuite {
     // the all-null-group fix rides a zero-weight null bin INSIDE the
     // histogram — a regression to the join-back shape would show a
     // second scan or a join here
-    TestSpark.withExtSession { s =>
-      Seq("agg_percentile", "agg_percentiles_multi").foreach { k =>
-        val p = plan(s, k)
-        val scans = "Scan parquet".r.findAllIn(p).size
-        assert(scans == 1, s"$k scans its input $scans times:\n$p")
-        assert(!p.contains("Join"), s"$k plans a join:\n$p")
-      }
+    val s = TestSpark.spark
+    Seq("agg_percentile", "agg_percentiles_multi").foreach { k =>
+      val p = plan(s, k)
+      val scans = "Scan parquet".r.findAllIn(p).size
+      assert(scans == 1, s"$k scans its input $scans times:\n$p")
+      assert(!p.contains("Join"), s"$k plans a join:\n$p")
     }
   }
 
@@ -484,16 +462,15 @@ class PlanShapeSpec extends AnyFunSuite {
     // cuts deciles from the bounded-state histogram percentile
     // (events_rfm_segments recipe); the corpus-scale stage must now be
     // a hash aggregate, with windows only over the ≤10-row decile table.
-    TestSpark.withExtSession { s =>
-      val p = plan(s, "ml_lift_table")
-      assert(!p.contains("ntile"), s"global ntile window still planned:\n$p")
-      assert(p.contains("HashAggregate"), s"no hash aggregate over the corpus:\n$p")
-      // exactly one embeddings scan: the score histogram is pinned and
-      // feeds both the cuts pass and the rollup
-      val scans = "Scan parquet".r.findAllIn(p).size
-      assert(scans == 0, // pinned bins truncate lineage → scan not in final plan
-        s"corpus rescanned below the pinned histogram ($scans scans):\n$p")
-    }
+    val s = TestSpark.spark
+    val p = plan(s, "ml_lift_table")
+    assert(!p.contains("ntile"), s"global ntile window still planned:\n$p")
+    assert(p.contains("HashAggregate"), s"no hash aggregate over the corpus:\n$p")
+    // exactly one embeddings scan: the score histogram is pinned and
+    // feeds both the cuts pass and the rollup
+    val scans = "Scan parquet".r.findAllIn(p).size
+    assert(scans == 0, // pinned bins truncate lineage → scan not in final plan
+      s"corpus rescanned below the pinned histogram ($scans scans):\n$p")
   }
 
   test("ml_lift_table cut-decile semantics: exact vs driver reference, near-ntile, all scales") {
@@ -503,60 +480,59 @@ class PlanShapeSpec extends AnyFunSuite {
     // interpolated quantiles, r4-rounded, strict-exceed buckets) and
     // (b) differ from the retired ntile table only by boundary ties
     // (per-decile row drift ≤ the largest tie run, totals identical).
-    TestSpark.withExtSession { s =>
-      def r4(v: Double): Double = math.floor(v * 10000.0 + 0.5) / 10000.0
-      Seq(TestSpark.sf0001, "/root/testdata/sf0.01", "/root/testdata/sf0.1").foreach { d =>
-        val rows = graft.api.MlPipeline
-          .linearScore(Tables.embeddings(s, d), "embedding", graft.ml.MlOps.weights)
-          .select(Canon.r4(col("score")).as("score"),
-            (col("label") % 2).cast("int").as("y"), col("vec_id"))
-          .collect().map(r => (r.getDouble(0), r.getInt(1), r.getLong(2)))
-        val asc = rows.map(_._1).sorted
-        val nR = asc.length
-        val cuts = (1 to 9).map { k =>
-          val h = (nR - 1).toDouble * k / 10.0
-          val (lo, hi) = (math.floor(h).toInt, math.ceil(h).toInt)
-          r4(if (lo == hi || asc(lo) == asc(hi)) asc(lo)
-             else (hi - h) * asc(lo) + (h - lo) * asc(hi))
+    val s = TestSpark.spark
+    def r4(v: Double): Double = math.floor(v * 10000.0 + 0.5) / 10000.0
+    val fixtures = new java.io.File(TestSpark.sf0001).getParent
+    Seq("sf0.001", "sf0.01", "sf0.1").map(sf => s"$fixtures/$sf").foreach { d =>
+      val rows = graft.api.MlPipeline
+        .linearScore(Tables.embeddings(s, d), "embedding", graft.ml.MlOps.weights)
+        .select(Canon.r4(col("score")).as("score"),
+          (col("label") % 2).cast("int").as("y"), col("vec_id"))
+        .collect().map(r => (r.getDouble(0), r.getInt(1), r.getLong(2)))
+      val asc = rows.map(_._1).sorted
+      val nR = asc.length
+      val cuts = (1 to 9).map { k =>
+        val h = (nR - 1).toDouble * k / 10.0
+        val (lo, hi) = (math.floor(h).toInt, math.ceil(h).toInt)
+        r4(if (lo == hi || asc(lo) == asc(hi)) asc(lo)
+           else (hi - h) * asc(lo) + (h - lo) * asc(hi))
+      }
+      val expected = rows.groupBy { case (sc, _, _) =>
+          10L - cuts.count(sc > _) }
+        .map { case (dd, rs) => (dd, rs.length.toLong, rs.map(_._2.toLong).sum) }
+        .toSeq.sortBy(_._1)
+      val actual = SparkEntry.queries("ml_lift_table")(s, d)
+        .select("decile", "n", "n_pos")
+        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+      assert(actual == expected, s"cut-decile mismatch at $d")
+      // ntile closeness: boundary ties are the ONLY divergence
+      val ntiles = rows.sortBy { case (sc, _, id) => (-sc, id) }
+        .zipWithIndex.map { case ((sc, y, _), i) =>
+          // SQL ntile remainder rule: first n%10 buckets get one extra
+          val base = nR / 10; val rem = nR % 10
+          val d10 = if (i < (base + 1) * rem) i / (base + 1)
+                    else rem + (i - (base + 1) * rem) / base
+          (d10 + 1L, y.toLong)
         }
-        val expected = rows.groupBy { case (sc, _, _) =>
-            10L - cuts.count(sc > _) }
-          .map { case (dd, rs) => (dd, rs.length.toLong, rs.map(_._2.toLong).sum) }
-          .toSeq.sortBy(_._1)
-        val actual = SparkEntry.queries("ml_lift_table")(s, d)
-          .select("decile", "n", "n_pos")
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-        assert(actual == expected, s"cut-decile mismatch at $d")
-        // ntile closeness: boundary ties are the ONLY divergence
-        val ntiles = rows.sortBy { case (sc, _, id) => (-sc, id) }
-          .zipWithIndex.map { case ((sc, y, _), i) =>
-            // SQL ntile remainder rule: first n%10 buckets get one extra
-            val base = nR / 10; val rem = nR % 10
-            val d10 = if (i < (base + 1) * rem) i / (base + 1)
-                      else rem + (i - (base + 1) * rem) / base
-            (d10 + 1L, y.toLong)
-          }
-        val old: Map[Long, (Long, Long)] = ntiles.groupBy(_._1)
-          .map { case (dd, rs) => (dd, (rs.length.toLong, rs.map(_._2).sum)) }
-        val maxTie = rows.groupBy(_._1).values.map(_.length).max.toLong
-        assert(actual.map(_._2).sum == old.values.map(_._1).sum)
-        assert(actual.map(_._3).sum == old.values.map(_._2).sum)
-        actual.foreach { case (dd, nn, _) =>
-          val on = old.get(dd).map(_._1).getOrElse(0L)
-          assert(math.abs(nn - on) <= maxTie,
-            s"decile $dd at $d drifted beyond boundary ties: cut=$nn ntile=$on")
-        }
+      val old: Map[Long, (Long, Long)] = ntiles.groupBy(_._1)
+        .map { case (dd, rs) => (dd, (rs.length.toLong, rs.map(_._2).sum)) }
+      val maxTie = rows.groupBy(_._1).values.map(_.length).max.toLong
+      assert(actual.map(_._2).sum == old.values.map(_._1).sum)
+      assert(actual.map(_._3).sum == old.values.map(_._2).sum)
+      actual.foreach { case (dd, nn, _) =>
+        val on = old.get(dd).map(_._1).getOrElse(0L)
+        assert(math.abs(nn - on) <= maxTie,
+          s"decile $dd at $d drifted beyond boundary ties: cut=$nn ntile=$on")
       }
     }
   }
 
   test("fanout does not add an exchange to an already-parallel input") {
-    TestSpark.withExtSession { s =>
-      val n = s.conf.get("spark.sql.shuffle.partitions").toInt
-      val wide = Tables.documents(s, TestSpark.sf0001).repartition(n, col("doc_id"))
-      val p = graft.api.Fanout(wide).queryExecution.executedPlan.toString
-      val exchanges = "Exchange".r.findAllIn(p).size
-      assert(exchanges == 1, s"fanout on $n-partition input added an exchange:\n$p")
-    }
+    val s = TestSpark.spark
+    val n = s.conf.get("spark.sql.shuffle.partitions").toInt
+    val wide = Tables.documents(s, TestSpark.sf0001).repartition(n, col("doc_id"))
+    val p = graft.api.Fanout(wide).queryExecution.executedPlan.toString
+    val exchanges = "Exchange".r.findAllIn(p).size
+    assert(exchanges == 1, s"fanout on $n-partition input added an exchange:\n$p")
   }
 }

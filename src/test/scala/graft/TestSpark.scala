@@ -2,42 +2,28 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** One shared local session for the whole test run (SURVEY §5.3). */
+/** One shared local session for the whole test run (SURVEY §5.3), in
+  * the posture Verify and Bench run: tests plan with the same rewrites
+  * and confs. */
 object TestSpark {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = GraftSession(cores = 4)
   val sf0001 = "/root/testdata/sf0.001"
 
-  /** A session with graft.GraftExtensions applied, sharing the suite's
-    * SparkContext (clearing the default session forces getOrCreate to
-    * build a fresh SessionState that honors the builder's extensions —
-    * `spark.sql.extensions` itself is a static conf that cannot attach
-    * to a pre-existing context). */
-  def withExtSession[A](f: SparkSession => A): A = {
-    spark // ensure the shared context exists
-    val prevDefault = SparkSession.getDefaultSession
-    val prevActive = SparkSession.getActiveSession
+  /** Stock Spark on the suite's SparkContext: the same confs, without
+    * GraftExtensions. Only for tests that compare a rewrite against the
+    * plan or answer Spark gives without it. Clearing the default and
+    * active session makes getOrCreate build a fresh session, and since
+    * GraftSession attaches the extensions through the builder hook (not
+    * the context's conf) this one gets none. It has its own SharedState,
+    * so catalog tables and cached frames of `spark` are not visible. */
+  lazy val stock: SparkSession = {
+    val graftSession = spark
     SparkSession.clearDefaultSession()
     SparkSession.clearActiveSession()
-    try {
-      val s = SparkSession.builder()
-        .withExtensions(new GraftExtensions())
-        .getOrCreate()
-      f(s)
-    } finally {
-      SparkSession.clearDefaultSession()
-      SparkSession.clearActiveSession()
-      prevDefault.foreach(SparkSession.setDefaultSession)
-      prevActive.foreach(SparkSession.setActiveSession)
+    try SparkSession.builder().getOrCreate()
+    finally {
+      SparkSession.setDefaultSession(graftSession)
+      SparkSession.setActiveSession(graftSession)
     }
   }
 }

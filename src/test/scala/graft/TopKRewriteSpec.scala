@@ -17,18 +17,16 @@ class TopKRewriteSpec extends AnyFunSuite {
 
   private def plan(df: DataFrame): String = df.queryExecution.executedPlan.toString
 
-  /** Build the query in a stock session (no extension) and in the
+  /** Build the query on stock Spark (no extension) and in the suite's
     * extension session; assert the rewrite did NOT fire and the rows
     * match exactly. */
   private def assertNoFireAndParity(build: SparkSession => DataFrame): Unit = {
-    val expected = build(TestSpark.spark).collect().map(_.toString).sorted.toSeq
-    TestSpark.withExtSession { s =>
-      val df = build(s)
-      val p = plan(df)
-      assert(!p.contains("TopKPerGroup"), s"rewrite fired on an unsafe shape:\n$p")
-      val got = df.collect().map(_.toString).sorted.toSeq
-      assert(got == expected, "extension session changed the result")
-    }
+    val expected = build(TestSpark.stock).collect().map(_.toString).sorted.toSeq
+    val df = build(TestSpark.spark)
+    val p = plan(df)
+    assert(!p.contains("TopKPerGroup"), s"rewrite fired on an unsafe shape:\n$p")
+    val got = df.collect().map(_.toString).sorted.toSeq
+    assert(got == expected, "extension session changed the result")
   }
 
   private def w = Window.partitionBy("o_custkey")
@@ -72,44 +70,41 @@ class TopKRewriteSpec extends AnyFunSuite {
   }
 
   test("k above spark.graft.topk.maxK keeps the stock Window (memory guard)") {
-    TestSpark.withExtSession { s =>
-      s.conf.set("spark.graft.topk.maxK", "2")
-      try {
-        val df = Tables.orders(s, sf)
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        assert(!plan(df).contains("TopKPerGroup"),
-          "rewrite fired above the configured maxK")
-      } finally s.conf.unset("spark.graft.topk.maxK")
-      // and back under the cap it fires again
-      val df2 = Tables.orders(s, sf)
+    val s = TestSpark.spark
+    s.conf.set("spark.graft.topk.maxK", "2")
+    try {
+      val df = Tables.orders(s, sf)
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-      assert(plan(df2).contains("TopKPerGroup"))
-    }
+      assert(!plan(df).contains("TopKPerGroup"),
+        "rewrite fired above the configured maxK")
+    } finally s.conf.unset("spark.graft.topk.maxK")
+    // and back under the cap it fires again
+    val df2 = Tables.orders(s, sf)
+      .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+    assert(plan(df2).contains("TopKPerGroup"))
   }
 
   test("an over-Int maxK cannot make a long bound wrap into a tiny int k") {
-    TestSpark.withExtSession { s =>
-      s.conf.set("spark.graft.topk.maxK", "10000000000") // > Int.MaxValue
-      try {
-        val df = Tables.orders(s, sf)
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 3000000000L) // would wrap negative as an Int
-        assert(!plan(df).contains("TopKPerGroup"),
-          "rewrite fired with a bound beyond Int range")
-        // semantics: every row survives a bound larger than any group
-        assert(df.count() == Tables.orders(s, sf).count())
-      } finally s.conf.unset("spark.graft.topk.maxK")
-    }
+    val s = TestSpark.spark
+    s.conf.set("spark.graft.topk.maxK", "10000000000") // > Int.MaxValue
+    try {
+      val df = Tables.orders(s, sf)
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") <= 3000000000L) // would wrap negative as an Int
+      assert(!plan(df).contains("TopKPerGroup"),
+        "rewrite fired with a bound beyond Int range")
+      // semantics: every row survives a bound larger than any group
+      assert(df.count() == Tables.orders(s, sf).count())
+    } finally s.conf.unset("spark.graft.topk.maxK")
   }
 
   test("spark.graft.topk.enabled=false disables the rewrite entirely") {
-    TestSpark.withExtSession { s =>
-      s.conf.set("spark.graft.topk.enabled", "false")
-      try {
-        val df = Tables.orders(s, sf)
-          .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
-        assert(!plan(df).contains("TopKPerGroup"), "rewrite fired while disabled")
-      } finally s.conf.unset("spark.graft.topk.enabled")
-    }
+    val s = TestSpark.spark
+    s.conf.set("spark.graft.topk.enabled", "false")
+    try {
+      val df = Tables.orders(s, sf)
+        .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
+      assert(!plan(df).contains("TopKPerGroup"), "rewrite fired while disabled")
+    } finally s.conf.unset("spark.graft.topk.enabled")
   }
 }
