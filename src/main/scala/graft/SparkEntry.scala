@@ -30,9 +30,14 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("agg_groupby_q1")(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    modules.map(_._1).reduce(_ ++ _)
+  /** One entry per implemented operator from SURVEY.md §2. Each runs in
+    * its own `Checkpoints.scope`: a key's pins are freed when it
+    * returns, except those its result reads, which the caller's
+    * `Checkpoints.free(result)` releases. */
+  def queries: Map[String, Q] =
+    modules.map(_._1).reduce(_ ++ _).map { case (key, q) =>
+      key -> ((s: SparkSession, d: String) => api.Checkpoints.scope(q(s, d)))
+    }
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys (SURVEY §2's ✘ rows) get the

@@ -119,9 +119,8 @@ object Dedup {
 
   /** The pair pipeline BELOW the pin: `sized` must already be the
     * pinned (_id, _grp, _h, _sz) shingle table. Split out so the
-    * adaptive ngram gate can hand its winning probe's pin straight in —
-    * re-pinning here would truncate lineage and strand the caller's
-    * checkpoint blocks out of Checkpoints.free(result)'s reach.
+    * adaptive ngram gate can hand its winning probe's pin straight in
+    * instead of materializing the table a second time.
     * `prefixOpt`: an already-materialized prefix table in the exact
     * shape [[prefixTable]] would build for this posture (the gate hands
     * its pinned probe table in, so the mass measurement and the pair
@@ -269,20 +268,13 @@ object Dedup {
     * ceil slack (float rounding may only LENGTHEN a prefix, never
     * shorten it), so they produce IDENTICAL prefixes — parity-asserted
     * in ApiParitySpec. */
-  /** The bounded decide-and-deliver probe for a local df map (the
-    * CC-gate shape): fewer rows than the cap ⇒ the universe fits and
-    * the rows ARE the df map; hitting the cap ⇒ caller falls through
-    * to the distributed join path. */
-  private def collectDfIfSmall(dfreq: DataFrame): Option[Array[org.apache.spark.sql.Row]] = {
-    val maxLocal = dfreq.sparkSession.conf
-      .get("spark.graft.jaccard.localDfThreshold", "1000000").toLong
-    if (maxLocal <= 0) None
-    else {
-      val cap = (math.min(maxLocal, Int.MaxValue - 2L) + 1L).toInt
-      val head = dfreq.limit(cap).collect()
-      if (head.length < cap) Some(head) else None
-    }
-  }
+  /** The bounded decide-and-deliver probe for a local df map
+    * ([[LocalProbe]]): Some(rows) ⇒ the universe fits and the rows ARE
+    * the df map; None ⇒ caller falls through to the distributed join
+    * path. */
+  private def collectDfIfSmall(dfreq: DataFrame): Option[Array[org.apache.spark.sql.Row]] =
+    LocalProbe.collectBounded(dfreq, dfreq.sparkSession.conf
+      .get("spark.graft.jaccard.localDfThreshold", "1000000").toLong)
 
   /** Map-side prefix selection against a collected (grp, shingle)→df
     * table: emits (_id, _grp, _sz, _s, _df) prefix rows from `sized` in
@@ -383,12 +375,11 @@ object Dedup {
     * verification. The engine's sub-quadraticity claim is that this
     * count tracks c·(true pairs + n), not n²; a spec generates a
     * corpus with a controlled duplicate rate and asserts exactly that.
-    * The hashed table is checkpointed like the real path — release
-    * with `Checkpoints.free` after counting. */
+    * The hashed table is checkpointed like the real path. */
   private[graft] def jaccardCandidatePairs(df: DataFrame, idCol: String,
       textCol: String, threshold: Double,
       partitionCol: Option[String] = None,
-      broadcastJoins: Boolean = true): DataFrame = {
+      broadcastJoins: Boolean = true): DataFrame = Checkpoints.scope {
     require(threshold > 0.0 && threshold <= 1.0,
       s"jaccard threshold must be in (0, 1], got $threshold")
     // same per-regime pinning as jaccardPairsFromHashes: the 400k-doc
@@ -411,7 +402,7 @@ object Dedup {
     * is too hot. */
   def nearJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, partitionCol: Option[String] = None,
-      broadcastJoins: Boolean = true): DataFrame = {
+      broadcastJoins: Boolean = true): DataFrame = Checkpoints.scope {
     // fanout BEFORE the hashing UDF: a single-partition scan would
     // otherwise run the whole corpus's token hashing on one core
     val hashed = fanout(df).select(col(idCol).as("_id"),
@@ -446,7 +437,7 @@ object Dedup {
     * SHUFFLE_HASH hints — equi-shuffles on (grp, shingle) / id only. */
   def containmentPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, partitionCol: Option[String] = None,
-      broadcastJoins: Boolean = true): DataFrame = {
+      broadcastJoins: Boolean = true): DataFrame = Checkpoints.scope {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment threshold must be in (0, 1], got $threshold")
     def pin(side: DataFrame): DataFrame =
@@ -577,12 +568,11 @@ object Dedup {
     * one-sided prefix filter admits for `containmentPairs(df, …,
     * threshold)` — before exact verification. The sub-quadraticity
     * claim is that this count tracks c·(true pairs + n), not n²; the
-    * hashed table is checkpointed like the real path — release with
-    * `Checkpoints.free` after counting. */
+    * hashed table is checkpointed like the real path. */
   private[graft] def containmentCandidatePairs(df: DataFrame, idCol: String,
       textCol: String, threshold: Double,
       partitionCol: Option[String] = None,
-      broadcastJoins: Boolean = true): DataFrame = {
+      broadcastJoins: Boolean = true): DataFrame = Checkpoints.scope {
     require(threshold > 0.0 && threshold <= 1.0,
       s"containment threshold must be in (0, 1], got $threshold")
     def pin(side: DataFrame): DataFrame =
@@ -622,7 +612,7 @@ object Dedup {
   def jaccardPairsAgainstIndex(probe: DataFrame, index: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       partitionCol: Option[String] = None,
-      broadcastJoins: Boolean = true): DataFrame = {
+      broadcastJoins: Boolean = true): DataFrame = Checkpoints.scope {
     require(threshold > 0.0 && threshold <= 1.0,
       s"jaccard threshold must be in (0, 1], got $threshold")
     def pin(side: DataFrame): DataFrame =
@@ -693,12 +683,10 @@ object Dedup {
     * shuffle on (band, bucket) / id, never a sort, never a broadcast of
     * a corpus that no longer fits. With the plan pinned, the hashing
     * work is safely materialized once, eagerly, at call time instead
-    * of re-running the token + signature UDFs per plan branch.
-    * Checkpoint retention: see [[Checkpoints]] — release with
-    * `Checkpoints.free(result)` after materializing. */
+    * of re-running the token + signature UDFs per plan branch. */
   def minhashPairs(df: DataFrame, idCol: String, textCol: String,
       threshold: Double, bands: Int = 16, rowsPerBand: Int = 8,
-      broadcastJoins: Boolean = true): DataFrame = {
+      broadcastJoins: Boolean = true): DataFrame = Checkpoints.scope {
     def pin(side: DataFrame): DataFrame =
       if (broadcastJoins) broadcast(side) else side.hint("shuffle_hash")
     // docs feeds both verify joins; sigs feeds both bucket-join sides —
@@ -754,7 +742,7 @@ object Dedup {
   def minhashPairsAgainstIndex(probe: DataFrame, index: DataFrame,
       idCol: String, textCol: String, threshold: Double,
       bands: Int = 16, rowsPerBand: Int = 8,
-      broadcastJoins: Boolean = true): DataFrame = {
+      broadcastJoins: Boolean = true): DataFrame = Checkpoints.scope {
     def prep(df: DataFrame): (DataFrame, DataFrame) = {
       val docs = Checkpoints.pin(fanout(df).select(col(idCol).as("_id"),
         Kernels.tokenHashesUdf(split(col(textCol), " ")).as("_th")))
@@ -777,13 +765,12 @@ object Dedup {
     *
     * Returns (docs, banded): docs = (_id, _th token hashes);
     * banded = (_id, _sig, _band, _bh), one row per (doc, band). The
-    * docs frame is eagerly PINNED (Checkpoints retention contract):
-    * banded derives from it, so without the pin each returned frame's
-    * materialization — i.e. each of the two table writes — re-ran the
-    * whole token-hashing pass (measured on dedup_minhash_persisted,
-    * r21). Call `Checkpoints.free(docs)` once BOTH frames are
-    * materialized (both tables written); freeing earlier breaks
-    * banded. */
+    * docs frame is eagerly PINNED: banded derives from it, so without
+    * the pin each returned frame's materialization — i.e. each of the
+    * two table writes — re-ran the whole token-hashing pass (measured
+    * on dedup_minhash_persisted, r21). The pin belongs to the caller's
+    * scope; outside one, `Checkpoints.free(docs)` once BOTH tables are
+    * written (freeing earlier breaks banded). */
   def minhashIndexTables(index: DataFrame, idCol: String, textCol: String,
       bands: Int = 16, rowsPerBand: Int = 8): (DataFrame, DataFrame) = {
     val docs = Checkpoints.pin(fanout(index).select(col(idCol).as("_id"),
@@ -804,7 +791,7 @@ object Dedup {
   def minhashProbePreparedIndex(probe: DataFrame, idxDocs: DataFrame,
       idxBanded: DataFrame, idCol: String, textCol: String,
       threshold: Double, bands: Int = 16, rowsPerBand: Int = 8,
-      broadcastJoins: Boolean = true): DataFrame = {
+      broadcastJoins: Boolean = true): DataFrame = Checkpoints.scope {
     val prbDocs = Checkpoints.pin(fanout(probe).select(col(idCol).as("_id"),
       Kernels.tokenHashesUdf(split(col(textCol), " ")).as("_th")))
     val prbBanded = prbDocs.select(col("_id"),
@@ -920,14 +907,15 @@ object Dedup {
     * for exploratory runs). With pointer halving the default budget
     * covers diameters beyond 2^20 — any practical graph.
     *
-    * Edge lists at or below `spark.graft.cc.localEdgeThreshold`
-    * (default 2M edges) skip the loop entirely for a driver union-find
-    * over the collected (id1, id2) pairs — identical labels, one job
+    * Edge lists at or below `spark.graft.graph.localEdgeThreshold`
+    * (default 2M edges, the GraphOps fast-path budget) skip the loop
+    * entirely for a driver union-find over the collected (id1, id2)
+    * pairs — identical labels, one job
     * instead of one per round. This is the broadcast-join analogue:
     * pick the local plan when the input provably fits, keep the
     * shuffle plan for when it doesn't. */
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
-      strict: Boolean = true): DataFrame = {
+      strict: Boolean = true): DataFrame = Checkpoints.scope {
     val spark = pairs.sparkSession
     val n = spark.conf.get("spark.sql.shuffle.partitions", "32").toInt
     // materialize the input pairs ONCE before fanning out: `sym` below
@@ -942,118 +930,92 @@ object Dedup {
     // the corpus that produced it, and below this edge budget a driver
     // union-find beats the iterative loop's per-round job latency by an
     // order of magnitude (and is immune to ambient-load stragglers).
-    // ONE bounded action decides AND delivers: collect up to
-    // threshold+1 rows — fewer than the cap means the graph fits and
-    // the collected rows ARE the union-find input; hitting the cap
-    // cost only a bounded probe over already-checkpointed blocks (no
-    // pair-pipeline re-run) and we take the distributed loop. Driver
-    // memory is bounded by the conf: ~2M Row(id, id) ≈ tens-of-MB at
-    // the default — raise it only with driver heap to match. Set
-    // spark.graft.cc.localEdgeThreshold=0 to force the distributed
-    // loop (tests do, and a 100 TB graph exceeds any sane threshold).
-    val localMax =
-      spark.conf.get("spark.graft.cc.localEdgeThreshold", "2000000").toLong
-    if (localMax > 0) {
-      val cap = (math.min(localMax, Int.MaxValue - 2L) + 1L).toInt
-      val head = edges.limit(cap).collect()
-      if (head.length < cap) {
-        try return localUnionFind(head, edges.schema("a").dataType, spark, n)
-        finally Checkpoints.free(edges)
+    // ONE bounded action decides AND delivers (LocalProbe): the probe
+    // reads already-checkpointed blocks (no pair-pipeline re-run).
+    // Driver memory is bounded by the conf: ~2M Row(id, id) ≈
+    // tens-of-MB at the default — raise it only with driver heap to
+    // match. Set spark.graft.graph.localEdgeThreshold=0 to force the
+    // distributed loop (tests do, and a 100 TB graph exceeds any sane
+    // threshold).
+    val head = LocalProbe.collectBounded(edges, GraphLocal.maxEdges(spark))
+    if (head.isDefined) localUnionFind(head.get, edges.schema("a").dataType, spark, n)
+    else {
+      // hash-partition the (static) edge list by the probe key ONCE; each
+      // round's join then only shuffles the much smaller label table
+      val sym = Checkpoints.pin(edges.union(edges.select(col("b").as("a"), col("a").as("b")))
+        .repartition(n, col("b")))
+      // the eager checkpoint IS the round's one action; Σlabel rides it
+      // as an observed metric instead of costing a second job. The sum is
+      // taken as decimal(38,0), not long: labels are node ids, and a raw
+      // i64 sum over billions of large ids could wrap, silently breaking
+      // the strict-monotonicity argument the early-exit relies on.
+      def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
+        val obs = org.apache.spark.sql.Observation()
+        val ck = Checkpoints.pin(
+          df.observe(obs, coalesce(sum(col("label").cast("decimal(38,0)")),
+            lit(0).cast("decimal(38,0)")).as("lsum")))
+        (ck, obs.get("lsum").asInstanceOf[java.math.BigDecimal])
       }
-    }
-    // hash-partition the (static) edge list by the probe key ONCE; each
-    // round's join then only shuffles the much smaller label table
-    val sym = Checkpoints.pin(edges.union(edges.select(col("b").as("a"), col("a").as("b")))
-      .repartition(n, col("b")))
-    // the eager checkpoint IS the round's one action; Σlabel rides it
-    // as an observed metric instead of costing a second job. The sum is
-    // taken as decimal(38,0), not long: labels are node ids, and a raw
-    // i64 sum over billions of large ids could wrap, silently breaking
-    // the strict-monotonicity argument the early-exit relies on.
-    def checkpointWithSum(df: DataFrame): (DataFrame, java.math.BigDecimal) = {
-      val obs = org.apache.spark.sql.Observation()
-      val ck = Checkpoints.pin(
-        df.observe(obs, coalesce(sum(col("label").cast("decimal(38,0)")),
-          lit(0).cast("decimal(38,0)")).as("lsum")))
-      (ck, obs.get("lsum").asInstanceOf[java.math.BigDecimal])
-    }
-    // free a superseded round's checkpoint blocks (and files, in the
-    // reliable posture) instead of leaving them to GC-driven cleanup —
-    // a long loop would otherwise pin every round's label table
-    def freeCheckpoint(df: DataFrame): Unit = Checkpoints.free(df)
-    // TEST HOOK — simulate executor loss / memory-pressure eviction:
-    // with spark.graft.cc.testEvictEachRound=true every round drops ALL
-    // persisted blocks after its checkpoint. In the reliable posture
-    // the loop still converges (data lives in checkpoint FILES, not
-    // blocks); in the local posture the next round's read of an evicted
-    // localCheckpoint block fails unrecoverably — exactly the 100 TB
-    // failure mode the conf exists to close. CheckpointPostureSpec
-    // asserts both sides of that contrast.
-    val evictEachRound =
-      spark.conf.get("spark.graft.cc.testEvictEachRound", "false").toBoolean
-    def maybeEvict(): Unit = if (evictEachRound)
-      spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
-    // round 1 needs no join: labels are the ids themselves, so the
-    // neighbor-min is a single aggregate over the edge list
-    // every checkpoint pinned by the loop is released on ALL exit
-    // paths: superseded rounds are freed as the loop runs, edges/sym in
-    // the finally, and the current labels table too on ANY abnormal
-    // exit — the strict non-convergence throw AND unexpected mid-loop
-    // failures (a failed checkpoint/Observation job) alike; only the
-    // successfully returned frame keeps its blocks
-    var labels: DataFrame = null
-    var returned = false
-    try {
-    var (l0, prevSum) = checkpointWithSum(sym.groupBy(col("b"))
-      .agg(least(min(col("a")), col("b")).as("label"))
-      .select(col("b").as("id"), col("label")))
-    labels = l0
-    maybeEvict()
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
-      val prop = sym.join(labels.withColumnRenamed("id", "b"), "b")
-        .select(col("a").as("id"), col("label"))
-      val merged = labels.union(prop)
-        .groupBy("id").agg(min(col("label")).as("label"))
-      // pointer halving: look the fresh label up in the PREVIOUS
-      // round's (already checkpointed) table — L_prev(x) <= x keeps the
-      // decrease monotone, and chains contract geometrically. Label
-      // values are node ids, so the lookup always hits; the left join +
-      // coalesce is belt-and-braces for the first round's self-labels.
-      // ADAPTIVE: dense near-dup graphs (diameter ~2-4) converge on
-      // plain propagation before the shortcut could help, so its two
-      // extra exchanges only start after round 3 — by then the graph
-      // has demonstrated real diameter and the log-round contraction
-      // is what bounds the loop.
-      val short =
-        if (i < 3) merged
-        else merged
-          .join(labels.select(col("id").as("_lid"), col("label").as("_ll")),
-            col("label") === col("_lid"), "left")
-          .select(col("id"), coalesce(col("_ll"), col("label")).as("label"))
-      val (next, s) = checkpointWithSum(short)
-      freeCheckpoint(labels)
-      labels = next
+      // TEST HOOK — simulate executor loss / memory-pressure eviction:
+      // with spark.graft.cc.testEvictEachRound=true every round drops ALL
+      // persisted blocks after its checkpoint. In the reliable posture
+      // the loop still converges (data lives in checkpoint FILES, not
+      // blocks); in the local posture the next round's read of an evicted
+      // localCheckpoint block fails unrecoverably — exactly the 100 TB
+      // failure mode the conf exists to close. CheckpointPostureSpec
+      // asserts both sides of that contrast.
+      val evictEachRound =
+        spark.conf.get("spark.graft.cc.testEvictEachRound", "false").toBoolean
+      def maybeEvict(): Unit = if (evictEachRound)
+        spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(true))
+      // round 1 needs no join: labels are the ids themselves, so the
+      // neighbor-min is a single aggregate over the edge list
+      var (labels, prevSum) = checkpointWithSum(sym.groupBy(col("b"))
+        .agg(least(min(col("a")), col("b")).as("label"))
+        .select(col("b").as("id"), col("label")))
       maybeEvict()
-      converged = s.compareTo(prevSum) == 0
-      prevSum = s
-      i += 1
-    }
-    if (!converged) {
-      val msg = s"connectedComponents did not converge in $maxIter rounds: " +
-        "a duplicate chain is longer than maxIter hops, so labels are not yet " +
-        "the reachable minimum. Raise maxIter, or for extreme-diameter graphs " +
-        "use large-star/small-star alternation (O(log n) rounds)."
-      if (strict) throw new IllegalStateException(msg)
-      else org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(msg)
-    }
-    returned = true
-    labels
-    } finally {
-      freeCheckpoint(edges)
-      freeCheckpoint(sym)
-      if (!returned && labels != null) freeCheckpoint(labels)
+      var converged = false
+      var i = 0
+      while (!converged && i < maxIter) {
+        val prop = sym.join(labels.withColumnRenamed("id", "b"), "b")
+          .select(col("a").as("id"), col("label"))
+        val merged = labels.union(prop)
+          .groupBy("id").agg(min(col("label")).as("label"))
+        // pointer halving: look the fresh label up in the PREVIOUS
+        // round's (already checkpointed) table — L_prev(x) <= x keeps the
+        // decrease monotone, and chains contract geometrically. Label
+        // values are node ids, so the lookup always hits; the left join +
+        // coalesce is belt-and-braces for the first round's self-labels.
+        // ADAPTIVE: dense near-dup graphs (diameter ~2-4) converge on
+        // plain propagation before the shortcut could help, so its two
+        // extra exchanges only start after round 3 — by then the graph
+        // has demonstrated real diameter and the log-round contraction
+        // is what bounds the loop.
+        val short =
+          if (i < 3) merged
+          else merged
+            .join(labels.select(col("id").as("_lid"), col("label").as("_ll")),
+              col("label") === col("_lid"), "left")
+            .select(col("id"), coalesce(col("_ll"), col("label")).as("label"))
+        val (next, s) = checkpointWithSum(short)
+        // free the superseded round's blocks (and files, in the reliable
+        // posture) — a long loop would otherwise pin every round's labels
+        Checkpoints.free(labels)
+        labels = next
+        maybeEvict()
+        converged = s.compareTo(prevSum) == 0
+        prevSum = s
+        i += 1
+      }
+      if (!converged) {
+        val msg = s"connectedComponents did not converge in $maxIter rounds: " +
+          "a duplicate chain is longer than maxIter hops, so labels are not yet " +
+          "the reachable minimum. Raise maxIter, or for extreme-diameter graphs " +
+          "use large-star/small-star alternation (O(log n) rounds)."
+        if (strict) throw new IllegalStateException(msg)
+        else org.slf4j.LoggerFactory.getLogger(Dedup.getClass).warn(msg)
+      }
+      labels
     }
   }
 
@@ -1102,7 +1064,7 @@ object Dedup {
   def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
       n: Int, threshold: Double, partitionCol: Option[String] = None,
       broadcastJoins: Boolean = true, autoEscalate: Boolean = true,
-      maxCandPerDoc: Long = 32768L, maxN: Int = 11): DataFrame = {
+      maxCandPerDoc: Long = 32768L, maxN: Int = 11): DataFrame = Checkpoints.scope {
     require(n >= 1, s"shingle size must be >= 1, got $n")
     // validate BEFORE any Spark job: an invalid threshold must throw
     // without hashing the corpus or pinning checkpoints (the gate loop
@@ -1124,8 +1086,7 @@ object Dedup {
     // for the real run (r17 shipped the gate re-deriving posting/df/
     // prefix work it had just measured: +3.1 s on an inert fixture
     // key; the mass is now a bucket-size rollup of the pair pipeline's
-    // OWN prefix table). Both pins stay leaves of the result's plan so
-    // Checkpoints.free(result) releases them.
+    // OWN prefix table).
     var winner: DataFrame = null
     var winnerPrefix: DataFrame = null
     val pinSide: DataFrame => DataFrame =

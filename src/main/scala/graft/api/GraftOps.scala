@@ -2,9 +2,11 @@ package graft.api
 
 import graft.Canon
 import graft.functions.Kernels
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
 
 /** Public, fixture-independent operator API — what a user of the
@@ -69,22 +71,40 @@ private[graft] object Fanout {
     if (df.rdd.getNumPartitions >= target) df else repart(df, target)
   }
 }
+
+/** The driver-side fast paths' decide-and-deliver probe, shared by
+  * the graph kernels, connected components, the PPJoin df table and
+  * the BPE trainer: collect up to `maxRows + 1` rows of `df` — fewer
+  * means it fits and the rows ARE the local input; hitting the cap
+  * costs one bounded action and the caller takes its distributed
+  * path. `maxRows <= 0` forces the distributed path. */
+private[graft] object LocalProbe {
+  def collectBounded(df: DataFrame, maxRows: Long): Option[Array[Row]] =
+    if (maxRows <= 0) None
+    else {
+      val cap = (math.min(maxRows, Int.MaxValue - 2L) + 1L).toInt
+      val head = df.limit(cap).collect()
+      if (head.length < cap) Some(head) else None
+    }
+}
+
 /** Lifecycle and POSTURE for the eager checkpoints some constructors pin.
   *
-  * RETENTION CONTRACT: `Dedup.minhashPairs`, `minhashPairsAgainstIndex`,
-  * `jaccardPairsFromHashes` (via `nearJaccardPairs` / `ngramJaccardPairs`),
-  * `jaccardPairsAgainstIndex`, and `Similarity.cosineTopKPairsBlocked`
-  * (the `sim_knn_bruteforce` key) materialize their hashed-doc /
-  * signature / cell-layout tables with eager checkpoints at CALL
-  * time (to run the expensive hashing once across plan branches). Those
-  * blocks stay
-  * pinned in executor storage until the returned frame is garbage
-  * collected (ContextCleaner) — fine for batch jobs, but a long-lived
-  * session constructing many pipelines should release them
-  * deterministically with `Checkpoints.free(result)` once the result is
-  * fully materialized (written / collected / checkpointed itself).
-  * Freeing earlier BREAKS the frame: a checkpoint truncates
-  * lineage, so its blocks cannot be recomputed.
+  * RETENTION: a pin holds executor storage (or checkpoint files) until
+  * it is freed, and freeing it before its readers are materialized
+  * breaks them — a checkpoint has no lineage to recompute from. Pins
+  * are owned by scope. While a [[scope]] is open on the calling thread,
+  * every [[pin]] registers with it; when the body returns, the pins its
+  * result still reads (a `LogicalRDD` leaf of the result's plan, or a
+  * checkpointed RDD in such a leaf's lineage) pass to the enclosing
+  * scope — or, outside every scope, to the caller, who releases them
+  * with `free(result)` once the result is materialized — and every
+  * other registered pin is freed; when the body throws, all of them
+  * are. `SparkEntry.queries` runs each key in a scope, and so do the
+  * pinning constructors of GraphOps, Dedup, Similarity, TimeSeriesOps
+  * and StatsOps. Loops still free each superseded round themselves,
+  * which also takes it out of the open scopes, so loop memory stays
+  * bounded and nothing is freed twice.
   *
   * POSTURE (`spark.graft.checkpoint.reliable`, default `false`):
   * - `false` — `localCheckpoint()`: blocks live in executor storage
@@ -116,33 +136,80 @@ object Checkpoints {
     }
   }
 
+  /** The pins registered with each scope open on this thread, innermost
+    * first, by RDD id. Not inheritable: a pool thread Spark starts
+    * inside a scope must not hold on to its pins. */
+  private val open = new ThreadLocal[List[mutable.Map[Int, RDD[_]]]] {
+    override def initialValue(): List[mutable.Map[Int, RDD[_]]] = Nil
+  }
+
   /** Materialize `df` exactly once (eagerly) under the session's
     * checkpoint posture — `localCheckpoint()` by default, a reliable
     * file-backed `checkpoint()` when `spark.graft.checkpoint.reliable`
-    * is true. All loop-carried and multi-branch frames in the dedup /
-    * CC / ANN constructors pin through here, so ONE conf flips the
-    * whole library to the fault-tolerant cluster posture. */
-  def pin(df: DataFrame): DataFrame =
-    if (reliable(df.sparkSession)) { ensureDir(df.sparkSession); df.checkpoint() }
-    else df.localCheckpoint()
+    * is true. All loop-carried and multi-branch frames pin through
+    * here, so ONE conf flips the whole library to the fault-tolerant
+    * cluster posture. */
+  def pin(df: DataFrame): DataFrame = {
+    val p =
+      if (reliable(df.sparkSession)) { ensureDir(df.sparkSession); df.checkpoint() }
+      else df.localCheckpoint()
+    open.get.headOption.foreach(_ ++= pins(p))
+    p
+  }
 
-  /** Unpersist every checkpoint block in `df`'s lineage (and delete the
-    * checkpoint files, for reliably-checkpointed frames). Call only
-    * after `df` (and anything else derived from the same constructor
-    * call) has been fully materialized and is no longer needed. */
-  def free(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-        // reliable-posture frames also hold files in the checkpoint
-        // dir; best-effort delete so a long session cannot fill disk
-        lr.rdd.getCheckpointFile.foreach { f =>
-          try {
-            val p = new org.apache.hadoop.fs.Path(f)
-            p.getFileSystem(df.sparkSession.sparkContext.hadoopConfiguration)
-              .delete(p, true)
-          } catch { case _: Throwable => () }
-        }
-      case _ => ()
+  /** Run `body` as the owner of the pins it makes (the retention rule
+    * above). A result that is not a DataFrame carries no pins. The body
+    * must not `return`: a non-local return is a throw, which would free
+    * the pins of the value it returns. */
+  def scope[T](body: => T): T = {
+    val outer = open.get
+    val mine = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    open.set(mine :: outer)
+    val result =
+      try body
+      catch { case t: Throwable => release(mine.values.toList); throw t }
+      finally open.set(outer)
+    val carried = result match {
+      case ds: Dataset[_] => pins(ds).keySet
+      case _ => Set.empty[Int]
     }
+    val (kept, dropped) = mine.partition { case (id, _) => carried(id) }
+    release(dropped.values)
+    outer.headOption.foreach(_ ++= kept)
+    result
+  }
+
+  /** Release every pin `df` reads, each once (and delete its checkpoint
+    * files, for reliably-checkpointed frames). Call only after `df`,
+    * and anything else that reads the same pins, is materialized. */
+  def free(df: DataFrame): Unit = release(pins(df).values)
+
+  private def release(rdds: Iterable[RDD[_]]): Unit = rdds.foreach { rdd =>
+    open.get.foreach(_ -= rdd.id)
+    rdd.unpersist(false)
+    // best-effort delete so a long session cannot fill the checkpoint dir
+    rdd.getCheckpointFile.foreach { f =>
+      try {
+        val p = new org.apache.hadoop.fs.Path(f)
+        p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)
+      } catch { case _: Throwable => () }
+    }
+  }
+
+  /** The pins `ds` reads, by RDD id: its `LogicalRDD` leaves (in
+    * subqueries too) plus every checkpointed RDD in their lineage — the
+    * latter is how a frame built by `createDataFrame` over a pin's rows
+    * reads it. */
+  private def pins(ds: Dataset[_]): Map[Int, RDD[_]] = {
+    val found = mutable.LinkedHashMap.empty[Int, RDD[_]]
+    val seen = mutable.Set.empty[Int]
+    def walk(r: RDD[_]): Unit = if (seen.add(r.id)) {
+      if (r.isCheckpointed) found(r.id) = r
+      r.dependencies.foreach(d => walk(d.rdd))
+    }
+    ds.queryExecution.analyzed
+      .collectWithSubqueries { case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
+      .foreach { r => found(r.id) = r; walk(r) }
+    found.toMap
+  }
 }

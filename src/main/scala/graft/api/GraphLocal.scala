@@ -30,17 +30,10 @@ import org.apache.spark.sql.{DataFrame, Row, SparkSession}
   */
 private[api] object GraphLocal {
 
+  /** The edge budget of every graph fast path, connected components
+    * included ([[LocalProbe.collectBounded]]'s `maxRows`). */
   def maxEdges(spark: SparkSession): Long =
     spark.conf.get("spark.graft.graph.localEdgeThreshold", "2000000").toLong
-
-  /** Bounded probe: Some(rows) iff `df` provably fits the budget. */
-  def collectBounded(df: DataFrame): Option[Array[Row]] = {
-    val max = maxEdges(df.sparkSession)
-    if (max <= 0) return None
-    val cap = (math.min(max, Int.MaxValue - 2L) + 1L).toInt
-    val head = df.limit(cap).collect()
-    if (head.length < cap) Some(head) else None
-  }
 
   /** Canon.rk on the driver: floor(x·10^k + 0.5)/10^k in pure IEEE
     * double ops — bit-identical to the Column form for the same input. */

@@ -50,7 +50,7 @@ object GraphOps {
     * N (one long). */
   def pagerankMass(edges: DataFrame, srcCol: String, dstCol: String,
       iters: Int, massScale: Long = 1000000000000L, dampPct: Int = 85,
-      broadcastMass: Boolean = true): DataFrame = {
+      broadcastMass: Boolean = true): DataFrame = Checkpoints.scope {
     require(iters >= 1, s"iters must be >= 1, got $iters")
     require(dampPct > 0 && dampPct < 100, s"dampPct must be in (0,100), got $dampPct")
     val e = Checkpoints.pin(edges
@@ -58,37 +58,36 @@ object GraphOps {
       .filter(col("_src") =!= col("_dst")).distinct())
     // SMALL-GRAPH FAST PATH (see GraphLocal): one bounded probe over the
     // pinned edge frame decides AND delivers; big graphs take the loop
-    val local = GraphLocal.collectBounded(e)
-    if (local.isDefined) {
-      try return GraphLocal.pagerank(edges.sparkSession, local.get,
-        iters, massScale, dampPct)
-      finally Checkpoints.free(e)
+    val local = LocalProbe.collectBounded(e, GraphLocal.maxEdges(e.sparkSession))
+    if (local.isDefined)
+      GraphLocal.pagerank(edges.sparkSession, local.get, iters, massScale, dampPct)
+    else {
+      val nodes = Checkpoints.pin(
+        e.select(col("_src").as("node")).union(e.select(col("_dst").as("node"))).distinct())
+      val eDeg = Checkpoints.pin(
+        e.join(e.groupBy("_src").agg(count(lit(1)).as("_outdeg")), "_src"))
+      val n = nodes.count() // bounded driver scalar: one long
+      require(n > 0, "pagerank needs a non-empty edge set")
+      val teleport = (massScale * (100L - dampPct) / 100L) / n
+      def pinMass(m: DataFrame): DataFrame =
+        if (broadcastMass) broadcast(m) else m.hint("shuffle_hash")
+      var mass = nodes.withColumn("mass", lit(massScale / n))
+      var pinnedRounds = 0
+      for (_ <- 1 to iters) {
+        val in = eDeg.join(pinMass(mass), col("_src") === col("node"))
+          .select(col("_dst"), expr(s"((mass * $dampPct) div 100) div _outdeg").as("_send"))
+          .groupBy("_dst").agg(sum(col("_send")).as("_in"))
+        val next = Checkpoints.pin(nodes.join(in, col("node") === col("_dst"), "left")
+          .select(col("node"), (lit(teleport) + coalesce(col("_in"), lit(0L))).as("mass")))
+        // the new pin is already materialized, so the superseded round's
+        // blocks can go — a long loop would otherwise pin every round's
+        // rank vector (the connectedComponents loop frees the same way)
+        if (pinnedRounds > 0) Checkpoints.free(mass)
+        mass = next
+        pinnedRounds += 1
+      }
+      mass
     }
-    val nodes = Checkpoints.pin(
-      e.select(col("_src").as("node")).union(e.select(col("_dst").as("node"))).distinct())
-    val eDeg = Checkpoints.pin(
-      e.join(e.groupBy("_src").agg(count(lit(1)).as("_outdeg")), "_src"))
-    val n = nodes.count() // bounded driver scalar: one long
-    require(n > 0, "pagerank needs a non-empty edge set")
-    val teleport = (massScale * (100L - dampPct) / 100L) / n
-    def pinMass(m: DataFrame): DataFrame =
-      if (broadcastMass) broadcast(m) else m.hint("shuffle_hash")
-    var mass = nodes.withColumn("mass", lit(massScale / n))
-    var pinnedRounds = 0
-    for (_ <- 1 to iters) {
-      val in = eDeg.join(pinMass(mass), col("_src") === col("node"))
-        .select(col("_dst"), expr(s"((mass * $dampPct) div 100) div _outdeg").as("_send"))
-        .groupBy("_dst").agg(sum(col("_send")).as("_in"))
-      val next = Checkpoints.pin(nodes.join(in, col("node") === col("_dst"), "left")
-        .select(col("node"), (lit(teleport) + coalesce(col("_in"), lit(0L))).as("mass")))
-      // the new pin is already materialized, so the superseded round's
-      // blocks can go — a long loop would otherwise pin every round's
-      // rank vector (the connectedComponents loop frees the same way)
-      if (pinnedRounds > 0) Checkpoints.free(mass)
-      mass = next
-      pinnedRounds += 1
-    }
-    mass
   }
 
   /** Bounded-hop BFS distances from a source node set, by min-plus
@@ -110,7 +109,7 @@ object GraphOps {
     * no driver-side id list. */
   def bfsDistances(edges: DataFrame, srcCol: String, dstCol: String,
       sources: DataFrame, maxHops: Int,
-      broadcastDist: Boolean = true): DataFrame = {
+      broadcastDist: Boolean = true): DataFrame = Checkpoints.scope {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val e = Checkpoints.pin(edges
       .select(col(srcCol).cast("long").as("_src"), col(dstCol).cast("long").as("_dst"))
@@ -118,40 +117,39 @@ object GraphOps {
     // SMALL-GRAPH FAST PATH — both the edge set and the (deduped)
     // source set must fit the budget; either probe failing falls
     // through to the distributed loop unchanged
-    val localE = GraphLocal.collectBounded(e)
-    if (localE.isDefined) {
-      val localSrc = GraphLocal.collectBounded(
-        sources.select(col("node").cast("long").as("node")).distinct())
-      if (localSrc.isDefined) {
-        try return GraphLocal.bfs(edges.sparkSession, localE.get,
-          localSrc.get.map(_.getLong(0)).toSet, maxHops)
-        finally Checkpoints.free(e)
+    val budget = GraphLocal.maxEdges(e.sparkSession)
+    val localE = LocalProbe.collectBounded(e, budget)
+    val localSrc = localE.flatMap(_ => LocalProbe.collectBounded(
+      sources.select(col("node").cast("long").as("node")).distinct(), budget))
+    if (localSrc.isDefined)
+      GraphLocal.bfs(edges.sparkSession, localE.get,
+        localSrc.get.map(_.getLong(0)).toSet, maxHops)
+    else {
+      val nodes = Checkpoints.pin(
+        e.select(col("_src").as("node")).union(e.select(col("_dst").as("node"))).distinct())
+      // distinct: dist₀ = nodes LEFT-join src, so a node listed twice in
+      // `sources` would duplicate its dist row and every round/output row
+      // after it — the same one-row-per-node invariant fix
+      // weightedDistances carries (r20 ADVICE closed here)
+      val src = sources.select(col("node").cast("long").as("node")).distinct()
+        .withColumn("_d0", lit(0L))
+      def pinD(m: DataFrame): DataFrame =
+        if (broadcastDist) broadcast(m) else m.hint("shuffle_hash")
+      var dist = Checkpoints.pin(nodes.join(src, Seq("node"), "left")
+        .select(col("node"), col("_d0").as("dist")))
+      for (_ <- 1 to maxHops) {
+        val nb = e.join(pinD(dist.filter(col("dist").isNotNull)),
+            col("_src") === col("node"))
+          .groupBy(col("_dst")).agg(min(col("dist") + lit(1L)).as("_nd"))
+        val next = Checkpoints.pin(nodes
+          .join(dist, Seq("node"))
+          .join(nb, col("node") === col("_dst"), "left")
+          .select(col("node"), least(col("dist"), col("_nd")).as("dist")))
+        Checkpoints.free(dist) // superseded round — see pagerankMass
+        dist = next
       }
+      dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
     }
-    val nodes = Checkpoints.pin(
-      e.select(col("_src").as("node")).union(e.select(col("_dst").as("node"))).distinct())
-    // distinct: dist₀ = nodes LEFT-join src, so a node listed twice in
-    // `sources` would duplicate its dist row and every round/output row
-    // after it — the same one-row-per-node invariant fix
-    // weightedDistances carries (r20 ADVICE closed here)
-    val src = sources.select(col("node").cast("long").as("node")).distinct()
-      .withColumn("_d0", lit(0L))
-    def pinD(m: DataFrame): DataFrame =
-      if (broadcastDist) broadcast(m) else m.hint("shuffle_hash")
-    var dist = Checkpoints.pin(nodes.join(src, Seq("node"), "left")
-      .select(col("node"), col("_d0").as("dist")))
-    for (_ <- 1 to maxHops) {
-      val nb = e.join(pinD(dist.filter(col("dist").isNotNull)),
-          col("_src") === col("node"))
-        .groupBy(col("_dst")).agg(min(col("dist") + lit(1L)).as("_nd"))
-      val next = Checkpoints.pin(nodes
-        .join(dist, Seq("node"))
-        .join(nb, col("node") === col("_dst"), "left")
-        .select(col("node"), least(col("dist"), col("_nd")).as("dist")))
-      Checkpoints.free(dist) // superseded round — see pagerankMass
-      dist = next
-    }
-    dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
   }
 
   /** Bounded WEIGHTED shortest-path distances (min-plus relaxation)
@@ -176,23 +174,20 @@ object GraphOps {
     * billion-node equi-shuffle posture, exactly as [[bfsDistances]]. */
   def weightedDistances(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, sources: DataFrame, rounds: Int,
-      broadcastDist: Boolean = true): DataFrame = {
+      broadcastDist: Boolean = true): DataFrame = Checkpoints.scope {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val sym = Checkpoints.pin(symmetricWeights(edges, srcCol, dstCol, wCol))
     // SMALL-GRAPH FAST PATH — probe the pinned symmetric fold (and the
     // deduped source set); either probe failing takes the loop
-    val localSym = GraphLocal.collectBounded(sym)
-    if (localSym.isDefined) {
-      val localSrc = GraphLocal.collectBounded(
-        sources.select(col("node").cast("long").as("node")).distinct())
-      if (localSrc.isDefined) {
-        try return GraphLocal.weighted(edges.sparkSession, localSym.get,
-          localSrc.get.map(_.getLong(0)).toSet, rounds)
-        finally Checkpoints.free(sym)
-      }
-    }
-    val nodes = Checkpoints.pin(sym.select(col("u").as("node")).distinct())
-    try {
+    val budget = GraphLocal.maxEdges(sym.sparkSession)
+    val localSym = LocalProbe.collectBounded(sym, budget)
+    val localSrc = localSym.flatMap(_ => LocalProbe.collectBounded(
+      sources.select(col("node").cast("long").as("node")).distinct(), budget))
+    if (localSrc.isDefined)
+      GraphLocal.weighted(edges.sparkSession, localSym.get,
+        localSrc.get.map(_.getLong(0)).toSet, rounds)
+    else {
+      val nodes = Checkpoints.pin(sym.select(col("u").as("node")).distinct())
       // distinct: dist₀ = nodes LEFT-join src, so a node listed twice
       // in `sources` would duplicate its dist row and every
       // round/output row after it — the one-row-per-node invariant the
@@ -203,35 +198,24 @@ object GraphOps {
         if (broadcastDist) broadcast(m) else m.hint("shuffle_hash")
       var dist = Checkpoints.pin(nodes.join(src, Seq("node"), "left")
         .select(col("node"), col("_d0").as("dist")))
-      try {
-        for (_ <- 1 to rounds) {
-          val nb = sym.join(pinD(dist.filter(col("dist").isNotNull)),
-              col("u") === col("node"))
-            .groupBy(col("v")).agg(min(col("dist") + col("w")).as("_nd"))
-          // dist is one row per node BY CONSTRUCTION (dist₀ = nodes
-          // left-join sources; every round preserves it), so joining
-          // back through `nodes` would be a 1:1 self-confirmation join
-          // — one redundant node-scale equi-join per round at the
-          // billion-node posture (review finding, r19; bfsDistances
-          // keeps its historical shape — same invariant, same rewrite
-          // available, but its committed plans/benches pin that form)
-          val next = Checkpoints.pin(dist
-            .join(nb, col("node") === col("v"), "left")
-            .select(col("node"), least(col("dist"), col("_nd")).as("dist")))
-          Checkpoints.free(dist) // superseded round — see pagerankMass
-          dist = next
-        }
-        dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
-      } catch {
-        // a throw mid-loop must not strand the live round's pin (the
-        // labelPropagationOnSym r18-ADVICE convention)
-        case e: Throwable => Checkpoints.free(dist); throw e
+      for (_ <- 1 to rounds) {
+        val nb = sym.join(pinD(dist.filter(col("dist").isNotNull)),
+            col("u") === col("node"))
+          .groupBy(col("v")).agg(min(col("dist") + col("w")).as("_nd"))
+        // dist is one row per node BY CONSTRUCTION (dist₀ = nodes
+        // left-join sources; every round preserves it), so joining
+        // back through `nodes` would be a 1:1 self-confirmation join
+        // — one redundant node-scale equi-join per round at the
+        // billion-node posture (review finding, r19; bfsDistances
+        // keeps its historical shape — same invariant, same rewrite
+        // available, but its committed plans/benches pin that form)
+        val next = Checkpoints.pin(dist
+          .join(nb, col("node") === col("v"), "left")
+          .select(col("node"), least(col("dist"), col("_nd")).as("dist")))
+        Checkpoints.free(dist) // superseded round — see pagerankMass
+        dist = next
       }
-    } finally {
-      // the final dist is a pinned leaf — the loop-invariant fold and
-      // node frames are no longer referenced by the returned plan, so
-      // free them here rather than strand them on the caller
-      Checkpoints.free(sym); Checkpoints.free(nodes)
+      dist.select(col("node"), coalesce(col("dist"), lit(-1L)).as("dist"))
     }
   }
 
@@ -251,9 +235,9 @@ object GraphOps {
     // edge derivation once; node ids surface as long on this path
     // (every other kernel here already casts — output consumers key on
     // node VALUE, and int/long equi-joins coerce)
-    val local = GraphLocal.collectBounded(edges.select(
+    val local = LocalProbe.collectBounded(edges.select(
       col(srcCol).cast("long"), col(dstCol).cast("long"),
-      col(weightCol).cast("long")))
+      col(weightCol).cast("long")), GraphLocal.maxEdges(edges.sparkSession))
     if (local.isDefined)
       return GraphLocal.degreeStats(edges.sparkSession, local.get)
     // node ids cast to long HERE TOO (r22): the output schema must not
@@ -296,37 +280,37 @@ object GraphOps {
     * triangle counting; degree-cap or sample hub nodes upstream on
     * power-law graphs) feeding one (a, b) hash aggregate, then two
     * broadcastable degree joins. No windows, no driver state. */
-  def linkPredict(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+  def linkPredict(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = Checkpoints.scope {
     val und = Checkpoints.pin(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
     // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.linkPredict(edges.sparkSession, local.get)
-      finally Checkpoints.free(und)
+    val local = LocalProbe.collectBounded(und, GraphLocal.maxEdges(und.sparkSession))
+    if (local.isDefined) GraphLocal.linkPredict(edges.sparkSession, local.get)
+    else {
+      val nbr = und.select(col("lo").as("u"), col("hi").as("v"))
+        .union(und.select(col("hi").as("u"), col("lo").as("v")))
+      val deg = nbr.groupBy("u").agg(count(lit(1)).as("_deg"))
+      val term = Canon.rk(lit(1.0) / log(col("_degw").cast("double")), 6)
+        .cast(org.apache.spark.sql.types.DecimalType(28, 6))
+      val pairs = nbr.select(col("v").as("_w"), col("u").as("a"))
+        .join(nbr.select(col("v").as("_w"), col("u").as("b")), "_w")
+        .filter(col("a") < col("b"))
+        .join(deg.select(col("u").as("_w"), col("_deg").as("_degw")), "_w")
+        .groupBy("a", "b")
+        .agg(count(lit(1)).as("cn"), sum(term).cast("double").as("adamic_adar"))
+      pairs
+        .join(deg.select(col("u").as("a"), col("_deg").as("_da")), "a")
+        .join(deg.select(col("u").as("b"), col("_deg").as("_db")), "b")
+        .join(und.select(col("lo").as("a"), col("hi").as("b"), lit(1L).as("_adj")),
+          Seq("a", "b"), "left")
+        .select(col("a"), col("b"), col("cn"),
+          (col("cn").cast("double")
+            / (col("_da") + col("_db") - col("cn")).cast("double")).as("jaccard"),
+          col("adamic_adar"), coalesce(col("_adj"), lit(0L)).as("adjacent"))
     }
-    val nbr = und.select(col("lo").as("u"), col("hi").as("v"))
-      .union(und.select(col("hi").as("u"), col("lo").as("v")))
-    val deg = nbr.groupBy("u").agg(count(lit(1)).as("_deg"))
-    val term = Canon.rk(lit(1.0) / log(col("_degw").cast("double")), 6)
-      .cast(org.apache.spark.sql.types.DecimalType(28, 6))
-    val pairs = nbr.select(col("v").as("_w"), col("u").as("a"))
-      .join(nbr.select(col("v").as("_w"), col("u").as("b")), "_w")
-      .filter(col("a") < col("b"))
-      .join(deg.select(col("u").as("_w"), col("_deg").as("_degw")), "_w")
-      .groupBy("a", "b")
-      .agg(count(lit(1)).as("cn"), sum(term).cast("double").as("adamic_adar"))
-    pairs
-      .join(deg.select(col("u").as("a"), col("_deg").as("_da")), "a")
-      .join(deg.select(col("u").as("b"), col("_deg").as("_db")), "b")
-      .join(und.select(col("lo").as("a"), col("hi").as("b"), lit(1L).as("_adj")),
-        Seq("a", "b"), "left")
-      .select(col("a"), col("b"), col("cn"),
-        (col("cn").cast("double")
-          / (col("_da") + col("_db") - col("cn")).cast("double")).as("jaccard"),
-        col("adamic_adar"), coalesce(col("_adj"), lit(0L)).as("adjacent"))
   }
 
   /** Per-node triangle counts of the UNDIRECTED simple graph underlying
@@ -341,47 +325,47 @@ object GraphOps {
     * otherwise enumerate d² wedges on one reducer; oriented by degree
     * it enumerates almost none). Output: (node, n_tri) for every node
     * of the undirected graph, zero-coalesced. */
-  def trianglesPerNode(edges: DataFrame, srcCol: String, dstCol: String): DataFrame = {
+  def trianglesPerNode(edges: DataFrame, srcCol: String,
+      dstCol: String): DataFrame = Checkpoints.scope {
     val und = Checkpoints.pin(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
     // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.triangles(edges.sparkSession, local.get)
-      finally Checkpoints.free(und)
+    val local = LocalProbe.collectBounded(und, GraphLocal.maxEdges(und.sparkSession))
+    if (local.isDefined) GraphLocal.triangles(edges.sparkSession, local.get)
+    else {
+      val deg = und.select(col("lo").as("node")).union(und.select(col("hi").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("_deg"))
+      // total orientation order: the (degree, id) STRUCT, compared
+      // lexicographically — not a packed d*2^32+id long, which collides
+      // (and loses the total order) once ids reach 2^32 or go negative,
+      // exactly the 64-bit-id regime a web-scale link graph lives in
+      val kLo = struct(col("_dlo").as("d"), col("lo").as("i"))
+      val kHi = struct(col("_dhi").as("d"), col("hi").as("i"))
+      val oriented = Checkpoints.pin(und
+        .join(deg.select(col("node").as("lo"), col("_deg").as("_dlo")), "lo")
+        .join(deg.select(col("node").as("hi"), col("_deg").as("_dhi")), "hi")
+        .select(
+          when(kLo < kHi, col("lo")).otherwise(col("hi")).as("u"),
+          when(kLo < kHi, col("hi")).otherwise(col("lo")).as("v"),
+          // the orientation key of v, for the wedge ordering below
+          greatest(kLo, kHi).as("_kv")))
+      // wedges at u: pairs of out-neighbors ordered by orientation key,
+      // closed by the (v, w) oriented cap edge
+      val e1 = oriented.select(col("u"), col("v").as("x"), col("_kv").as("_kx"))
+      val e2 = oriented.select(col("u"), col("v").as("y"), col("_kv").as("_ky"))
+      val tri = e1.join(e2, Seq("u")).filter(col("_kx") < col("_ky"))
+        .join(oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
+        .select(col("u"), col("x"), col("y"))
+      val nodes = deg.select("node")
+      val counts = tri.select(col("u").as("node"))
+        .union(tri.select(col("x").as("node")))
+        .union(tri.select(col("y").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("n_tri"))
+      nodes.join(counts, Seq("node"), "left")
+        .select(col("node"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
     }
-    val deg = und.select(col("lo").as("node")).union(und.select(col("hi").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("_deg"))
-    // total orientation order: the (degree, id) STRUCT, compared
-    // lexicographically — not a packed d*2^32+id long, which collides
-    // (and loses the total order) once ids reach 2^32 or go negative,
-    // exactly the 64-bit-id regime a web-scale link graph lives in
-    val kLo = struct(col("_dlo").as("d"), col("lo").as("i"))
-    val kHi = struct(col("_dhi").as("d"), col("hi").as("i"))
-    val oriented = Checkpoints.pin(und
-      .join(deg.select(col("node").as("lo"), col("_deg").as("_dlo")), "lo")
-      .join(deg.select(col("node").as("hi"), col("_deg").as("_dhi")), "hi")
-      .select(
-        when(kLo < kHi, col("lo")).otherwise(col("hi")).as("u"),
-        when(kLo < kHi, col("hi")).otherwise(col("lo")).as("v"),
-        // the orientation key of v, for the wedge ordering below
-        greatest(kLo, kHi).as("_kv")))
-    // wedges at u: pairs of out-neighbors ordered by orientation key,
-    // closed by the (v, w) oriented cap edge
-    val e1 = oriented.select(col("u"), col("v").as("x"), col("_kv").as("_kx"))
-    val e2 = oriented.select(col("u"), col("v").as("y"), col("_kv").as("_ky"))
-    val tri = e1.join(e2, Seq("u")).filter(col("_kx") < col("_ky"))
-      .join(oriented.select(col("u").as("x"), col("v").as("y")), Seq("x", "y"))
-      .select(col("u"), col("x"), col("y"))
-    val nodes = deg.select("node")
-    val counts = tri.select(col("u").as("node"))
-      .union(tri.select(col("x").as("node")))
-      .union(tri.select(col("y").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
-    nodes.join(counts, Seq("node"), "left")
-      .select(col("node"), coalesce(col("n_tri"), lit(0L)).as("n_tri"))
   }
 
   /** Local clustering coefficient per node of the undirected simple
@@ -399,26 +383,25 @@ object GraphOps {
     * oriented wedges, never the deg² of a celebrity node) plus one
     * degree aggregate ∝ edges and a node-keyed equi-join. */
   def clusteringCoefficient(edges: DataFrame, srcCol: String,
-      dstCol: String): DataFrame = {
+      dstCol: String): DataFrame = Checkpoints.scope {
     val und = Checkpoints.pin(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
     // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.clustering(edges.sparkSession, local.get)
-      finally Checkpoints.free(und)
+    val local = LocalProbe.collectBounded(und, GraphLocal.maxEdges(und.sparkSession))
+    if (local.isDefined) GraphLocal.clustering(edges.sparkSession, local.get)
+    else {
+      val deg = und.select(col("lo").as("node"))
+        .union(und.select(col("hi").as("node")))
+        .groupBy("node").agg(count(lit(1)).as("deg"))
+      deg.join(trianglesPerNode(und, "lo", "hi"), "node")
+        .select(col("node"), col("deg"), col("n_tri"),
+          when(col("deg") >= 2,
+            Canon.rk(col("n_tri").cast("double") * 2.0
+              / (col("deg").cast("double") * (col("deg") - 1).cast("double")), 6))
+            .otherwise(0.0).as("local_cc"))
     }
-    val deg = und.select(col("lo").as("node"))
-      .union(und.select(col("hi").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("deg"))
-    deg.join(trianglesPerNode(und, "lo", "hi"), "node")
-      .select(col("node"), col("deg"), col("n_tri"),
-        when(col("deg") >= 2,
-          Canon.rk(col("n_tri").cast("double") * 2.0
-            / (col("deg").cast("double") * (col("deg") - 1).cast("double")), 6))
-          .otherwise(0.0).as("local_cc"))
   }
 
   /** Harmonic (closeness-family) centrality by bounded multi-source
@@ -441,45 +424,44 @@ object GraphOps {
     * aggregate, labels re-pinned per round, superseded pins freed
     * (O(1) loop-carried plan, the [[pagerankMass]] posture). */
   def harmonicCentrality(edges: DataFrame, srcCol: String, dstCol: String,
-      maxHops: Int): DataFrame = {
+      maxHops: Int): DataFrame = Checkpoints.scope {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
     val und = Checkpoints.pin(edges
       .select(least(col(srcCol), col(dstCol)).cast("long").as("lo"),
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
     // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.harmonic(edges.sparkSession, local.get, maxHops)
-      finally Checkpoints.free(und)
+    val local = LocalProbe.collectBounded(und, GraphLocal.maxEdges(und.sparkSession))
+    if (local.isDefined) GraphLocal.harmonic(edges.sparkSession, local.get, maxHops)
+    else {
+      val sym = Checkpoints.pin(
+        und.select(col("lo").as("u"), col("hi").as("v"))
+          .union(und.select(col("hi").as("u"), col("lo").as("v"))))
+      val nodes = und.select(col("lo").as("node"))
+        .union(und.select(col("hi").as("node"))).distinct()
+      var lab = Checkpoints.pin(nodes
+        .select(col("node").as("origin"), col("node"), lit(0L).as("dist")))
+      for (_ <- 1 to maxHops) {
+        val cand = sym.join(lab, col("u") === col("node"))
+          .select(col("origin"), col("v").as("node"),
+            (col("dist") + lit(1L)).as("dist"))
+        val next = Checkpoints.pin(
+          lab.select("origin", "node", "dist").union(cand)
+            .groupBy("origin", "node").agg(min(col("dist")).as("dist")))
+        Checkpoints.free(lab)
+        lab = next
+      }
+      val contrib = Canon.rk(lit(1.0) / col("dist").cast("double"), 6)
+        .cast(DecimalType(28, 6))
+      val agg = lab.filter(col("origin") =!= col("node"))
+        .groupBy("node").agg(count(lit(1)).as("n_reached"),
+          Canon.r4(sum(contrib).cast("double")).as("harmonic"))
+      // a node that reaches nobody inside the budget has only its self
+      // label and would drop from the aggregate — keep it at zero
+      nodes.join(agg, Seq("node"), "left")
+        .select(col("node"), coalesce(col("n_reached"), lit(0L)).as("n_reached"),
+          coalesce(col("harmonic"), lit(0.0)).as("harmonic"))
     }
-    val sym = Checkpoints.pin(
-      und.select(col("lo").as("u"), col("hi").as("v"))
-        .union(und.select(col("hi").as("u"), col("lo").as("v"))))
-    val nodes = und.select(col("lo").as("node"))
-      .union(und.select(col("hi").as("node"))).distinct()
-    var lab = Checkpoints.pin(nodes
-      .select(col("node").as("origin"), col("node"), lit(0L).as("dist")))
-    for (_ <- 1 to maxHops) {
-      val cand = sym.join(lab, col("u") === col("node"))
-        .select(col("origin"), col("v").as("node"),
-          (col("dist") + lit(1L)).as("dist"))
-      val next = Checkpoints.pin(
-        lab.select("origin", "node", "dist").union(cand)
-          .groupBy("origin", "node").agg(min(col("dist")).as("dist")))
-      Checkpoints.free(lab)
-      lab = next
-    }
-    val contrib = Canon.rk(lit(1.0) / col("dist").cast("double"), 6)
-      .cast(DecimalType(28, 6))
-    val agg = lab.filter(col("origin") =!= col("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_reached"),
-        Canon.r4(sum(contrib).cast("double")).as("harmonic"))
-    // a node that reaches nobody inside the budget has only its self
-    // label and would drop from the aggregate — keep it at zero
-    nodes.join(agg, Seq("node"), "left")
-      .select(col("node"), coalesce(col("n_reached"), lit(0L)).as("n_reached"),
-        coalesce(col("harmonic"), lit(0.0)).as("harmonic"))
   }
 
   /** k-core membership by `rounds` rounds of parallel peeling over the
@@ -504,7 +486,7 @@ object GraphOps {
     * Output: every node of the input graph with its final in-core
     * flag and surviving degree (0 when peeled). */
   def kcoreMembers(edges: DataFrame, srcCol: String, dstCol: String,
-      k: Int, rounds: Int, broadcastKeep: Boolean = true): DataFrame = {
+      k: Int, rounds: Int, broadcastKeep: Boolean = true): DataFrame = Checkpoints.scope {
     require(k >= 1, s"k must be >= 1, got $k")
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val und = Checkpoints.pin(edges
@@ -512,44 +494,43 @@ object GraphOps {
         greatest(col(srcCol), col(dstCol)).cast("long").as("hi"))
       .filter(col("lo") =!= col("hi")).distinct())
     // SMALL-GRAPH FAST PATH — see GraphLocal
-    val local = GraphLocal.collectBounded(und)
-    if (local.isDefined) {
-      try return GraphLocal.kcore(edges.sparkSession, local.get, k, rounds)
-      finally Checkpoints.free(und)
+    val local = LocalProbe.collectBounded(und, GraphLocal.maxEdges(und.sparkSession))
+    if (local.isDefined) GraphLocal.kcore(edges.sparkSession, local.get, k, rounds)
+    else {
+      val nodes = und.select(col("lo").as("node"))
+        .union(und.select(col("hi").as("node"))).distinct()
+      def pinKeep(m: DataFrame): DataFrame =
+        if (broadcastKeep) broadcast(m) else m.hint("shuffle_hash")
+      var sym = Checkpoints.pin(
+        und.select(col("lo").as("u"), col("hi").as("v"))
+          .union(und.select(col("hi").as("u"), col("lo").as("v"))))
+      for (_ <- 1 to rounds) {
+        // keep is PINNED before its two join references: the rename
+        // projection on the second side defeats ReuseExchange, so an
+        // unpinned keep would run the degree aggregate over the edge
+        // list twice per round — at the billion-node shuffle posture
+        // that doubles every round's dominant cost
+        val keep = Checkpoints.pin(sym.groupBy("u")
+          .agg(count(lit(1)).as("_d"))
+          .filter(col("_d") >= k).select("u"))
+        val next = Checkpoints.pin(sym
+          .join(pinKeep(keep), "u")
+          .join(pinKeep(keep.select(col("u").as("v"))), "v")
+          .select("u", "v"))
+        // every round of sym (the initial one included) is its own pin
+        // whose lineage collapsed at checkpoint time — freeing it cannot
+        // touch `und`, which `nodes` still reads (see pagerankMass)
+        Checkpoints.free(sym)
+        Checkpoints.free(keep)
+        sym = next
+      }
+      val core = sym.groupBy(col("u").as("node"))
+        .agg(count(lit(1)).as("kcore_deg"))
+      nodes.join(core, Seq("node"), "left")
+        .select(col("node"),
+          when(col("kcore_deg").isNotNull, 1L).otherwise(0L).as("in_kcore"),
+          coalesce(col("kcore_deg"), lit(0L)).as("kcore_deg"))
     }
-    val nodes = und.select(col("lo").as("node"))
-      .union(und.select(col("hi").as("node"))).distinct()
-    def pinKeep(m: DataFrame): DataFrame =
-      if (broadcastKeep) broadcast(m) else m.hint("shuffle_hash")
-    var sym = Checkpoints.pin(
-      und.select(col("lo").as("u"), col("hi").as("v"))
-        .union(und.select(col("hi").as("u"), col("lo").as("v"))))
-    for (_ <- 1 to rounds) {
-      // keep is PINNED before its two join references: the rename
-      // projection on the second side defeats ReuseExchange, so an
-      // unpinned keep would run the degree aggregate over the edge
-      // list twice per round — at the billion-node shuffle posture
-      // that doubles every round's dominant cost
-      val keep = Checkpoints.pin(sym.groupBy("u")
-        .agg(count(lit(1)).as("_d"))
-        .filter(col("_d") >= k).select("u"))
-      val next = Checkpoints.pin(sym
-        .join(pinKeep(keep), "u")
-        .join(pinKeep(keep.select(col("u").as("v"))), "v")
-        .select("u", "v"))
-      // every round of sym (the initial one included) is its own pin
-      // whose lineage collapsed at checkpoint time — freeing it cannot
-      // touch `und`, which `nodes` still reads (see pagerankMass)
-      Checkpoints.free(sym)
-      Checkpoints.free(keep)
-      sym = next
-    }
-    val core = sym.groupBy(col("u").as("node"))
-      .agg(count(lit(1)).as("kcore_deg"))
-    nodes.join(core, Seq("node"), "left")
-      .select(col("node"),
-        when(col("kcore_deg").isNotNull, 1L).otherwise(0L).as("in_kcore"),
-        coalesce(col("kcore_deg"), lit(0L)).as("kcore_deg"))
   }
 
   /** Synchronous WEIGHTED label propagation (community detection), the
@@ -591,42 +572,26 @@ object GraphOps {
     .groupBy("u", "v").agg(sum(col("_w")).as("w"))
 
   def labelPropagation(edges: DataFrame, srcCol: String, dstCol: String,
-      wCol: String, rounds: Int): DataFrame = {
-    val sym = Checkpoints.pin(symmetricWeights(edges, srcCol, dstCol, wCol))
-    // the returned labels frame is itself a pinned leaf (lineage
-    // truncated), so a caller's Checkpoints.free(result) could never
-    // reach the sym pin — free it here, after the last round has
-    // materialized (the kcore in-loop convention)
-    try labelPropagationOnSym(sym, rounds)
-    finally Checkpoints.free(sym)
+      wCol: String, rounds: Int): DataFrame = Checkpoints.scope {
+    labelPropagationOnSym(
+      Checkpoints.pin(symmetricWeights(edges, srcCol, dstCol, wCol)), rounds)
   }
 
   /** [[labelPropagation]] over an already-pinned symmetric adjacency —
     * for callers that reuse one sym fold across LPA and a downstream
-    * readout ([[modularityOnSym]]). `sym` must outlive every round's
-    * construction; the caller owns (and must free) its pin.
-    *
-    * The RETURNED labels frame is itself a pinned leaf: the caller must
-    * `Checkpoints.free` it (directly, or via freeing a result whose
-    * plan still contains it) once consumed — exactly like the sym pin
-    * it was built over. On failure mid-loop the live round pin is
-    * freed here (r18 ADVICE: a throw between rounds must not strand
-    * the superseded round's checkpoint blocks). */
-  def labelPropagationOnSym(sym: DataFrame, rounds: Int): DataFrame = {
+    * readout ([[modularityOnSym]]). */
+  def labelPropagationOnSym(sym: DataFrame, rounds: Int): DataFrame = Checkpoints.scope {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
-    // SMALL-GRAPH FAST PATH — sym is caller-pinned, so the probe is a
-    // cheap block read and the caller keeps ownership of (and frees)
-    // its pin; the returned local frame needs no free (a no-op)
-    val local = GraphLocal.collectBounded(sym)
-    if (local.isDefined)
-      return GraphLocal.lpa(sym.sparkSession, local.get, rounds)
-    var labels = sym.select(col("u").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    var pinned: Option[DataFrame] = None
-    val wv = org.apache.spark.sql.expressions.Window
-      .partitionBy("node").orderBy(col("votes").desc, col("lbl").asc)
-    try {
-      for (_ <- 1 to rounds) {
+    // SMALL-GRAPH FAST PATH — sym is pinned, so the probe is a cheap
+    // block read
+    val local = LocalProbe.collectBounded(sym, GraphLocal.maxEdges(sym.sparkSession))
+    if (local.isDefined) GraphLocal.lpa(sym.sparkSession, local.get, rounds)
+    else {
+      var labels = sym.select(col("u").as("node")).distinct()
+        .select(col("node"), col("node").as("lbl"))
+      val wv = org.apache.spark.sql.expressions.Window
+        .partitionBy("node").orderBy(col("votes").desc, col("lbl").asc)
+      for (round <- 1 to rounds) {
         val next = Checkpoints.pin(sym
           .join(labels.select(col("node").as("v"), col("lbl")), "v")
           .groupBy(col("u").as("node"), col("lbl"))
@@ -634,15 +599,11 @@ object GraphOps {
           .withColumn("_rn", row_number().over(wv))
           .filter(col("_rn") <= 1)
           .select("node", "lbl"))
-        pinned.foreach(Checkpoints.free)
-        pinned = Some(next)
+        // round 1's labels are not a pin: freeing them would free sym
+        if (round > 1) Checkpoints.free(labels)
         labels = next
       }
       labels
-    } catch {
-      case e: Throwable =>
-        pinned.foreach(Checkpoints.free)
-        throw e
     }
   }
 
@@ -659,63 +620,46 @@ object GraphOps {
     * off it), labels broadcast (bounded), state ∝ communities. */
   def modularity(edges: DataFrame, srcCol: String, dstCol: String,
       wCol: String, labels: DataFrame, nodeCol: String = "node",
-      lblCol: String = "lbl"): DataFrame = {
-    val sym = Checkpoints.pin(symmetricWeights(edges, srcCol, dstCol, wCol))
-    val out =
-      try modularityOnSym(sym, labels, nodeCol, lblCol)
-      catch { case e: Throwable => Checkpoints.free(sym); throw e }
-    // a fast-path result is a LocalRelation that no longer references
-    // the sym pin, so the caller's free(result) would be a no-op — free
-    // the pin HERE, deterministically (r22, ADVICE r21); the distributed
-    // result keeps the pin in-plan and the documented caller free holds
-    val carriesPin = out.queryExecution.analyzed.collectFirst {
-      case _: org.apache.spark.sql.execution.LogicalRDD => () }.isDefined
-    if (!carriesPin) Checkpoints.free(sym)
-    out
+      lblCol: String = "lbl"): DataFrame = Checkpoints.scope {
+    modularityOnSym(Checkpoints.pin(symmetricWeights(edges, srcCol, dstCol, wCol)),
+      labels, nodeCol, lblCol)
   }
 
-  /** [[modularity]] over an already-pinned symmetric adjacency. The
-    * sym pin stays inside the RESULT's plan (the result is not itself
-    * checkpointed), so a caller's `Checkpoints.free(result)` after
-    * materialization releases it — no stranded blocks. */
+  /** [[modularity]] over an already-pinned symmetric adjacency. */
   def modularityOnSym(sym: DataFrame, labels: DataFrame,
       nodeCol: String = "node", lblCol: String = "lbl"): DataFrame = {
     val lab = labels.select(col(nodeCol).cast("long").as("_nd"),
       col(lblCol).cast("long").as("_lb"))
-    // SMALL-GRAPH FAST PATH — both probes bounded; on this path the
-    // result does NOT carry the caller's sym pin (free(result) becomes
-    // a no-op) — the few superseded blocks fall to ContextCleaner
-    val localSym = GraphLocal.collectBounded(sym)
-    if (localSym.isDefined) {
-      val localLab = GraphLocal.collectBounded(lab)
-      if (localLab.isDefined) {
-        val pairs = localLab.get.map(r => r.getLong(0) -> r.getLong(1))
-        // one-row-per-node is the label contract; a duplicated node
-        // would silently last-win in the map where the distributed
-        // inner joins double-count — fall through to the loop so both
-        // postures keep ONE semantics on such input (r22, ADVICE r21)
-        if (pairs.map(_._1).distinct.length == pairs.length)
-          return GraphLocal.modularity(sym.sparkSession, localSym.get,
-            pairs.toMap)
-      }
+    // SMALL-GRAPH FAST PATH — both probes bounded; one-row-per-node is
+    // the label contract, and a duplicated node would silently last-win
+    // in the map where the distributed inner joins double-count — such
+    // input falls through to the distributed readout so both postures
+    // keep ONE semantics (r22, ADVICE r21)
+    val budget = GraphLocal.maxEdges(sym.sparkSession)
+    val localSym = LocalProbe.collectBounded(sym, budget)
+    val pairs = localSym.flatMap(_ => LocalProbe.collectBounded(lab, budget))
+      .map(_.map(r => r.getLong(0) -> r.getLong(1)))
+    if (pairs.exists(p => p.map(_._1).distinct.length == p.length))
+      GraphLocal.modularity(sym.sparkSession, localSym.get, pairs.get.toMap)
+    else {
+      val tot = sym.agg(sum(col("w")).as("_W"))
+      val aC = sym.groupBy("u").agg(sum(col("w")).as("_k"))
+        .join(broadcast(lab), col("u") === col("_nd"))
+        .groupBy(col("_lb").as("community"))
+        .agg(count(lit(1)).as("n_nodes"), sum(col("_k")).as("a_deg"))
+      val eC = sym
+        .join(broadcast(lab.select(col("_nd").as("u"), col("_lb").as("_lu"))), "u")
+        .join(broadcast(lab.select(col("_nd").as("v"), col("_lb").as("_lv"))), "v")
+        .filter(col("_lu") === col("_lv"))
+        .groupBy(col("_lu").as("community")).agg(sum(col("w")).as("e_in"))
+      val wD = col("_W").cast("double")
+      aC.join(eC, Seq("community"), "left")
+        .crossJoin(broadcast(tot))
+        .select(col("community"), col("n_nodes"),
+          coalesce(col("e_in"), lit(0L)).as("e_in"), col("a_deg"),
+          Canon.rk(coalesce(col("e_in"), lit(0L)).cast("double") / wD
+            - (col("a_deg").cast("double") / wD)
+              * (col("a_deg").cast("double") / wD), 6).as("contrib"))
     }
-    val tot = sym.agg(sum(col("w")).as("_W"))
-    val aC = sym.groupBy("u").agg(sum(col("w")).as("_k"))
-      .join(broadcast(lab), col("u") === col("_nd"))
-      .groupBy(col("_lb").as("community"))
-      .agg(count(lit(1)).as("n_nodes"), sum(col("_k")).as("a_deg"))
-    val eC = sym
-      .join(broadcast(lab.select(col("_nd").as("u"), col("_lb").as("_lu"))), "u")
-      .join(broadcast(lab.select(col("_nd").as("v"), col("_lb").as("_lv"))), "v")
-      .filter(col("_lu") === col("_lv"))
-      .groupBy(col("_lu").as("community")).agg(sum(col("w")).as("e_in"))
-    val wD = col("_W").cast("double")
-    aC.join(eC, Seq("community"), "left")
-      .crossJoin(broadcast(tot))
-      .select(col("community"), col("n_nodes"),
-        coalesce(col("e_in"), lit(0L)).as("e_in"), col("a_deg"),
-        Canon.rk(coalesce(col("e_in"), lit(0L)).cast("double") / wD
-          - (col("a_deg").cast("double") / wD)
-            * (col("a_deg").cast("double") / wD), 6).as("contrib"))
   }
 }

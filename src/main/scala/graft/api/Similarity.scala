@@ -66,11 +66,9 @@ object Similarity {
     * cell-local pairs exist at all (near-trivial corpora). */
   def cosineTopKPairsBlocked(df: DataFrame, idCol: String, vecCol: String,
       k: Int, centroids: Array[Array[Float]],
-      simRound: Option[Int] = None): DataFrame = {
+      simRound: Option[Int] = None): DataFrame = Checkpoints.scope {
     require(k >= 1, s"k must be >= 1, got $k")
-    // one cell layout shared by both passes (materialized now; freed by
-    // the caller via Checkpoints.free after consuming the result, like
-    // the dedup operators' shared tables)
+    // one cell layout shared by both passes, materialized now
     val vecs = Checkpoints.pin(assignCells(df, idCol, vecCol, centroids))
     val radii = collectRadii(vecs)
     val a = vecs.select(col("_vid").as("id1"), col("_v").as("_va"), col("_cell"))
@@ -557,7 +555,7 @@ object Similarity {
     * batch reopens it cold and probes nprobe/|cells| of the files
     * instead of re-embedding, re-assigning, or re-reading anything. */
   def saveIvfIndex(df: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Float]], path: String): Unit = {
+      centroids: Array[Array[Float]], path: String): Unit = Checkpoints.scope {
     // A rebuild at `path` is a compaction: it must not inherit the
     // prior index's tombstones, or ivfKnnFromIndex would keep
     // suppressing ids the new corpus legitimately contains (silent row
@@ -578,21 +576,19 @@ object Similarity {
     val assigned = Checkpoints.pin(
       df.select(col(idCol).as("_vid"), col(vecCol).as("_v"))
         .withColumn("_cell", cellOf(col("_v"))))
-    try {
-      graft.sources.Writers.writePartitioned(assigned, "_cell", s"$path/cells")
-      // index manifest: the measured recall ladder rides with the index
-      // so the routed probe ([[ivfKnnFromIndexRouted]]) reads an array
-      // instead of re-calibrating against the corpus; like the codebook
-      // it is frozen at build time (drift → rebuild, monitored by
-      // embeddingDrift)
-      val spark = df.sparkSession
-      import spark.implicits._
-      // coalesce, not repartition: one driver-local row — a
-      // repartition(1) added a shuffle per index build (r21)
-      Seq(Tuple1(probeRecallLadderAssigned(assigned, centroids)))
-        .toDF("ladder").coalesce(1)
-        .write.mode("overwrite").parquet(s"$path/meta")
-    } finally Checkpoints.free(assigned)
+    graft.sources.Writers.writePartitioned(assigned, "_cell", s"$path/cells")
+    // index manifest: the measured recall ladder rides with the index
+    // so the routed probe ([[ivfKnnFromIndexRouted]]) reads an array
+    // instead of re-calibrating against the corpus; like the codebook
+    // it is frozen at build time (drift → rebuild, monitored by
+    // embeddingDrift)
+    val spark = df.sparkSession
+    import spark.implicits._
+    // coalesce, not repartition: one driver-local row — a
+    // repartition(1) added a shuffle per index build (r21)
+    Seq(Tuple1(probeRecallLadderAssigned(assigned, centroids)))
+      .toDF("ladder").coalesce(1)
+      .write.mode("overwrite").parquet(s"$path/meta")
   }
 
   /** The build-time index manifest [[saveIvfIndex]] persists: the

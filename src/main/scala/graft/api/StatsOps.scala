@@ -638,7 +638,7 @@ object StatsOps {
     * variance on either axis emit NULL ρ (guarded on the exact-sum
     * denominators). */
   def spearmanCorr(df: DataFrame, groupCol: String, xCol: String,
-      yCol: String, scale: Int = 2): DataFrame = {
+      yCol: String, scale: Int = 2): DataFrame = Checkpoints.scope {
     val dt = DecimalType(18, scale)
     val d38 = DecimalType(38, 0)
     // base fans into both rank histograms AND the final join — pin it
@@ -873,7 +873,7 @@ object StatsOps {
     * Output per fold: n_train, n_test, slope, intercept (r4 readouts
     * of the 6 dp grid), out-of-sample rmse and mae. */
   def crossValLinReg(df: DataFrame, foldCol: String, xCol: String,
-      yCol: String, scale: Int = 2): DataFrame = {
+      yCol: String, scale: Int = 2): DataFrame = Checkpoints.scope {
     val dt = DecimalType(18, scale)
     val d6 = DecimalType(18, 6)
     // NOTE (r22, measured): a keyed Fanout.byKey spread of the fact

@@ -227,7 +227,7 @@ object TimeSeriesOps {
     * the z join (§7.2); the slot table (keys × 24) broadcasts back;
     * one rank window per key over the grid. */
   def seasonalAnomalies(df: DataFrame, tsCol: String, keyCol: String,
-      binSeconds: Int, topK: Int): DataFrame = {
+      binSeconds: Int, topK: Int): DataFrame = Checkpoints.scope {
     require(topK >= 1, s"topK must be >= 1, got $topK")
     val g = Checkpoints.pin(
       resampleGapfill(df, tsCol, keyCol, binSeconds)
@@ -616,7 +616,7 @@ object TimeSeriesOps {
     * key is the epoch-hour integer (µs div 3.6e9), no timezone in
     * play. Output: (hour_bucket, n_changes, peak_concurrency). */
   def concurrencyPeak(df: DataFrame, userCol: String, idCol: String,
-      tsCol: String, gapUs: Long): DataFrame = {
+      tsCol: String, gapUs: Long): DataFrame = Checkpoints.scope {
     // sess feeds both union legs and byUs feeds the offsets AND the
     // within-hour window — pin both (§7.2 fan-out trap: unpinned,
     // sessionize's two window passes ran 2×, the boundary aggregate 2×)

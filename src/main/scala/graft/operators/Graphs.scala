@@ -247,8 +247,7 @@ object Graphs {
       // two LPA rounds then spells the same divisions.
       // ONE symmetric fold shared by the LPA rounds and the modularity
       // readout (building it twice would double the dominant edge-fold
-      // cost); the sym pin rides the result's plan, so the harness's
-      // free(result) releases it after materialization
+      // cost)
       val sym = graft.api.Checkpoints.pin(GraphOps.symmetricWeights(
         tradeEdges(s, d), "src", "dst", "w"))
       val labels = GraphOps.labelPropagationOnSym(sym, rounds = 2)

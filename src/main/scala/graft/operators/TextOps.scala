@@ -52,7 +52,7 @@ object TextOps {
     * merged segmentation. State ∝ vocabulary at every point; the
     * corpus is never touched after the first aggregate. */
   def bpeTrainIter(s: org.apache.spark.sql.SparkSession, d: String,
-      rounds: Int): org.apache.spark.sql.DataFrame = {
+      rounds: Int): org.apache.spark.sql.DataFrame = graft.api.Checkpoints.scope {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val SEP = ""
     // ␟h␟␟e␟␟y␟ + a trailing ␟ from the regexp (harmless — the pair
@@ -67,84 +67,76 @@ object TextOps {
           concat(lit(SEP), regexp_replace(col("w"), "(.)", "$1" + SEP + SEP))
             .as("seg")))
     val merges = Seq.newBuilder[(Long, String, String, Long)]
-    try {
-      // SMALL-VOCAB FAST PATH (r21, the GraphLocal decide-and-deliver
-      // pattern): the trainer's loop state is the bounded (freq, seg)
-      // vocabulary table — below the budget, ONE bounded collect off
-      // the pinned frame replaces 2 jobs per round (argmax + re-pin)
-      // with a driver loop of the IDENTICAL arithmetic: overlapping
-      // freq-weighted adjacent pair counts, argmax on (n DESC, a ASC,
-      // b ASC) under unsigned-UTF-8-byte string order (what Spark's
-      // string sort is), left-to-right non-overlapping literal replace
-      // on the same ␟-transport. OperatorSemanticsSpec pins all 20
-      // merges against its own sequential reference, and the
-      // loop-posture parity test pins local ≡ loop. Set
-      // spark.graft.bpe.localVocabThreshold=0 to force the loop.
-      val localMax =
-        s.conf.get("spark.graft.bpe.localVocabThreshold", "2000000").toLong
-      var local = false
-      if (localMax > 0) {
-        val cap = (math.min(localMax, Int.MaxValue - 2L) + 1L).toInt
-        val head = segT.limit(cap).collect()
-        if (head.length < cap) {
-          local = true
-          def u8(x: String, y: String): Int = java.util.Arrays.compareUnsigned(
-            x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-            y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          var words = head.map(r => (r.getLong(0), r.getString(1)))
-          var done = false
-          for (round <- 1 to rounds if !done) {
-            val pairs = collection.mutable.Map.empty[(String, String), Long]
-            words.foreach { case (freq, seg) =>
-              val syms = seg.split(SEP).filter(_.nonEmpty)
-              var i = 0
-              while (i + 1 < syms.length) {
-                val k = (syms(i), syms(i + 1))
-                pairs(k) = pairs.getOrElse(k, 0L) + freq
-                i += 1
-              }
-            }
-            if (pairs.isEmpty) done = true
-            else {
-              var bestA: String = null; var bestB: String = null; var bestN = -1L
-              pairs.foreach { case ((a, b), n) =>
-                val better = n > bestN || (n == bestN &&
-                  (u8(a, bestA) < 0 || (u8(a, bestA) == 0 && u8(b, bestB) < 0)))
-                if (better) { bestA = a; bestB = b; bestN = n }
-              }
-              merges += ((round.toLong, bestA, bestB, bestN))
-              val from = SEP + bestA + SEP + SEP + bestB + SEP
-              val to = SEP + bestA + bestB + SEP
-              words = words.map { case (f, seg) => (f, seg.replace(from, to)) }
-            }
+    // SMALL-VOCAB FAST PATH (r21, the GraphLocal decide-and-deliver
+    // pattern): the trainer's loop state is the bounded (freq, seg)
+    // vocabulary table — below the budget, ONE bounded collect off
+    // the pinned frame replaces 2 jobs per round (argmax + re-pin)
+    // with a driver loop of the IDENTICAL arithmetic: overlapping
+    // freq-weighted adjacent pair counts, argmax on (n DESC, a ASC,
+    // b ASC) under unsigned-UTF-8-byte string order (what Spark's
+    // string sort is), left-to-right non-overlapping literal replace
+    // on the same ␟-transport. OperatorSemanticsSpec pins all 20
+    // merges against its own sequential reference, and the
+    // loop-posture parity test pins local ≡ loop. Set
+    // spark.graft.bpe.localVocabThreshold=0 to force the loop.
+    val local = graft.api.LocalProbe.collectBounded(segT,
+      s.conf.get("spark.graft.bpe.localVocabThreshold", "2000000").toLong)
+    local.foreach { rows =>
+      def u8(x: String, y: String): Int = java.util.Arrays.compareUnsigned(
+        x.getBytes(java.nio.charset.StandardCharsets.UTF_8),
+        y.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      var words = rows.map(r => (r.getLong(0), r.getString(1)))
+      var done = false
+      for (round <- 1 to rounds if !done) {
+        val pairs = collection.mutable.Map.empty[(String, String), Long]
+        words.foreach { case (freq, seg) =>
+          val syms = seg.split(SEP).filter(_.nonEmpty)
+          var i = 0
+          while (i + 1 < syms.length) {
+            val k = (syms(i), syms(i + 1))
+            pairs(k) = pairs.getOrElse(k, 0L) + freq
+            i += 1
           }
         }
-      }
-      var exhausted = local
-      for (round <- 1 to rounds if !exhausted) {
-        val top = segT
-          .withColumn("_syms", filter(split(col("seg"), SEP), x => x =!= lit("")))
-          .filter(size(col("_syms")) >= 2)
-          .select(col("freq"), explode(
-            transform(sequence(lit(1), size(col("_syms")) - 1),
-              i => struct(element_at(col("_syms"), i).as("a"),
-                element_at(col("_syms"), i + 1).as("b")))).as("p"))
-          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-          .agg(sum(col("freq")).as("n"))
-          .orderBy(col("n").desc, col("a").asc, col("b").asc)
-          .limit(1).collect()
-        if (top.isEmpty) exhausted = true
+        if (pairs.isEmpty) done = true
         else {
-          val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-          merges += ((round.toLong, a, b, n))
-          val next = graft.api.Checkpoints.pin(segT.select(col("freq"),
-            call_function("replace", col("seg"),
-              lit(SEP + a + SEP + SEP + b + SEP), lit(SEP + a + b + SEP)).as("seg")))
-          graft.api.Checkpoints.free(segT)
-          segT = next
+          var bestA: String = null; var bestB: String = null; var bestN = -1L
+          pairs.foreach { case ((a, b), n) =>
+            val better = n > bestN || (n == bestN &&
+              (u8(a, bestA) < 0 || (u8(a, bestA) == 0 && u8(b, bestB) < 0)))
+            if (better) { bestA = a; bestB = b; bestN = n }
+          }
+          merges += ((round.toLong, bestA, bestB, bestN))
+          val from = SEP + bestA + SEP + SEP + bestB + SEP
+          val to = SEP + bestA + bestB + SEP
+          words = words.map { case (f, seg) => (f, seg.replace(from, to)) }
         }
       }
-    } finally graft.api.Checkpoints.free(segT)
+    }
+    var exhausted = local.isDefined
+    for (round <- 1 to rounds if !exhausted) {
+      val top = segT
+        .withColumn("_syms", filter(split(col("seg"), SEP), x => x =!= lit("")))
+        .filter(size(col("_syms")) >= 2)
+        .select(col("freq"), explode(
+          transform(sequence(lit(1), size(col("_syms")) - 1),
+            i => struct(element_at(col("_syms"), i).as("a"),
+              element_at(col("_syms"), i + 1).as("b")))).as("p"))
+        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+        .agg(sum(col("freq")).as("n"))
+        .orderBy(col("n").desc, col("a").asc, col("b").asc)
+        .limit(1).collect()
+      if (top.isEmpty) exhausted = true
+      else {
+        val (a, b, n) = (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+        merges += ((round.toLong, a, b, n))
+        val next = graft.api.Checkpoints.pin(segT.select(col("freq"),
+          call_function("replace", col("seg"),
+            lit(SEP + a + SEP + SEP + b + SEP), lit(SEP + a + b + SEP)).as("seg")))
+        graft.api.Checkpoints.free(segT)
+        segT = next
+      }
+    }
     val sess = s
     import sess.implicits._
     merges.result().toDF("round", "sym_a", "sym_b", "n").orderBy("round")
@@ -182,13 +174,9 @@ object TextOps {
       val tag = base.split('_').takeRight(2).head.take(8)
       val docsT = s"graft_mhpo_docs_$tag"
       val bandT = s"graft_mhpo_banded_$tag"
-      // try/finally: a failed second write must not strand the pinned
-      // hash frame (minhashIndexTables retention contract, r22)
-      try {
-        graft.sources.Writers.writeBucketed(idxDocs, "_id", 8, docsT, s"$base/docs")
-        graft.sources.Writers.writeBucketed(idxBanded, Seq("_band", "_bh"), 8,
-          bandT, s"$base/banded")
-      } finally graft.api.Checkpoints.free(idxDocs)
+      graft.sources.Writers.writeBucketed(idxDocs, "_id", 8, docsT, s"$base/docs")
+      graft.sources.Writers.writeBucketed(idxBanded, Seq("_band", "_bh"), 8,
+        bandT, s"$base/banded")
       mhProbeIndexes.put(d, (docsT, bandT))
       (docsT, bandT)
     }
@@ -276,47 +264,45 @@ object TextOps {
           .select(explode(split(col("text"), " ")).as("w"))
           .filter(length(col("w")) >= 2 && !col("w").contains(SEP))
           .groupBy("w").agg(count(lit(1)).as("freq")))
-      try {
-        // ␟h␟␟e␟␟y␟ + a trailing ␟ from the regexp (harmless: the
-        // extra separator can neither create nor block a match — the
-        // pair pattern needs symbol chars between separators)
-        val seg0: org.apache.spark.sql.Column =
-          concat(lit(SEP), regexp_replace(col("w"), "(.)", "$1" + SEP + SEP))
-        def argmax(seg: org.apache.spark.sql.Column): (String, String, Long) = {
-          // typed higher-order functions, not expr() strings: the
-          // separator is a control char and embedding it inside a SQL
-          // string literal for the parser is exactly the kind of
-          // invisible fragility this key cannot afford
-          val top = words.select(col("freq"), seg.as("_seg"))
-            .withColumn("_syms",
-              filter(split(col("_seg"), SEP), x => x =!= lit("")))
-            // 1-symbol words have no pair; Spark's sequence(1, 0)
-            // DESCENDS ([1, 0]) rather than returning empty
-            .filter(size(col("_syms")) >= 2)
-            .select(col("freq"), explode(
-              transform(sequence(lit(1), size(col("_syms")) - 1),
-                i => struct(element_at(col("_syms"), i).as("a"),
-                  element_at(col("_syms"), i + 1).as("b")))).as("p"))
-            .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-            .agg(sum(col("freq")).as("n"))
-            .orderBy(col("n").desc, col("a").asc, col("b").asc)
-            .limit(1).collect()
-          require(top.nonEmpty,
-            "text_bpe_train_k: no adjacent symbol pairs left to merge")
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        }
-        var seg = seg0
-        val merges = Seq.newBuilder[(Long, String, String, Long)]
-        for (round <- 1 to 3) {
-          val (a, b, n) = argmax(seg)
-          merges += ((round.toLong, a, b, n))
-          seg = call_function("replace", seg,
-            lit(SEP + a + SEP + SEP + b + SEP), lit(SEP + a + b + SEP))
-        }
-        val sess = s
-        import sess.implicits._
-        merges.result().toDF("round", "sym_a", "sym_b", "n").orderBy("round")
-      } finally graft.api.Checkpoints.free(words)
+      // ␟h␟␟e␟␟y␟ + a trailing ␟ from the regexp (harmless: the
+      // extra separator can neither create nor block a match — the
+      // pair pattern needs symbol chars between separators)
+      val seg0: org.apache.spark.sql.Column =
+        concat(lit(SEP), regexp_replace(col("w"), "(.)", "$1" + SEP + SEP))
+      def argmax(seg: org.apache.spark.sql.Column): (String, String, Long) = {
+        // typed higher-order functions, not expr() strings: the
+        // separator is a control char and embedding it inside a SQL
+        // string literal for the parser is exactly the kind of
+        // invisible fragility this key cannot afford
+        val top = words.select(col("freq"), seg.as("_seg"))
+          .withColumn("_syms",
+            filter(split(col("_seg"), SEP), x => x =!= lit("")))
+          // 1-symbol words have no pair; Spark's sequence(1, 0)
+          // DESCENDS ([1, 0]) rather than returning empty
+          .filter(size(col("_syms")) >= 2)
+          .select(col("freq"), explode(
+            transform(sequence(lit(1), size(col("_syms")) - 1),
+              i => struct(element_at(col("_syms"), i).as("a"),
+                element_at(col("_syms"), i + 1).as("b")))).as("p"))
+          .groupBy(col("p.a").as("a"), col("p.b").as("b"))
+          .agg(sum(col("freq")).as("n"))
+          .orderBy(col("n").desc, col("a").asc, col("b").asc)
+          .limit(1).collect()
+        require(top.nonEmpty,
+          "text_bpe_train_k: no adjacent symbol pairs left to merge")
+        (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+      }
+      var seg = seg0
+      val merges = Seq.newBuilder[(Long, String, String, Long)]
+      for (round <- 1 to 3) {
+        val (a, b, n) = argmax(seg)
+        merges += ((round.toLong, a, b, n))
+        seg = call_function("replace", seg,
+          lit(SEP + a + SEP + SEP + b + SEP), lit(SEP + a + b + SEP))
+      }
+      val sess = s
+      import sess.implicits._
+      merges.result().toDF("round", "sym_a", "sym_b", "n").orderBy("round")
     }),
     "text_bpe_train_iter" -> ((s, d) => bpeTrainIter(s, d, rounds = 20)),
     "text_bpe_encode" -> ((s, d) => {
@@ -362,7 +348,6 @@ object TextOps {
         graft.api.Checkpoints.free(st)
         st = next
       }
-      // the returned frame is a pinned leaf (the kcore/LPA convention)
       val vocab = st.select(col("w"),
         size(filter(split(col("seg"), SEP), x => x =!= lit("")))
           .cast("long").as("_np"))
@@ -928,15 +913,10 @@ object TextOps {
       val (idxDocs, idxBanded) =
         Dedup.minhashIndexTables(docs.filter(!isNew), "doc_id", "text")
       val base = graft.sources.Writers.roundTripDir("graft_mh_index", d)
-      // try/finally: a failed second write must not strand the pinned
-      // hash frame (minhashIndexTables retention contract, r22); the
-      // probe below reads the catalog tables, never these frames
-      try {
-        graft.sources.Writers.writeBucketed(idxDocs, "_id", 8,
-          "graft_mhp_docs", s"$base/docs")
-        graft.sources.Writers.writeBucketed(idxBanded, Seq("_band", "_bh"), 8,
-          "graft_mhp_banded", s"$base/banded")
-      } finally graft.api.Checkpoints.free(idxDocs)
+      graft.sources.Writers.writeBucketed(idxDocs, "_id", 8,
+        "graft_mhp_docs", s"$base/docs")
+      graft.sources.Writers.writeBucketed(idxBanded, Seq("_band", "_bh"), 8,
+        "graft_mhp_banded", s"$base/banded")
       Dedup.minhashProbePreparedIndex(docs.filter(isNew),
           s.table("graft_mhp_docs"), s.table("graft_mhp_banded"),
           "doc_id", "text", 0.8)
@@ -1006,7 +986,6 @@ object TextOps {
       val pairs = Dedup.nearJaccardPairs(Tables.documents(s, d),
         "doc_id", "text", 0.8, Some("lang"))
       val clusters = Dedup.connectedComponents(pairs)
-      graft.api.Checkpoints.free(pairs)
       val bySize = clusters.groupBy("label").agg(count(lit(1)).as("cluster_size"))
       val hist = bySize.groupBy("cluster_size").agg(
         count(lit(1)).as("n_clusters"),
@@ -1034,10 +1013,6 @@ object TextOps {
       val pairs = Dedup.nearJaccardPairs(Tables.documents(s, d),
         "doc_id", "text", 0.8, Some("lang"))
       val clusters = Dedup.connectedComponents(pairs)
-      // CC materialized the pair graph into its own checkpoint, so the
-      // pair pipeline's hash-table checkpoints are dead weight now —
-      // release them deterministically instead of waiting for GC
-      graft.api.Checkpoints.free(pairs)
       clusters
         .select(col("id").as("doc_id"), col("label").as("cluster"))
         .orderBy("doc_id")
@@ -1052,10 +1027,6 @@ object TextOps {
       val docs = Tables.documents(s, d)
       val pairs = Dedup.nearJaccardPairs(docs, "doc_id", "text", 0.8, Some("lang"))
       val clusters = Dedup.connectedComponents(pairs)
-      // the label table is CC's own materialized output — the pair
-      // pipeline's checkpoints are no longer reachable from it; free
-      // them now rather than at GC time
-      graft.api.Checkpoints.free(pairs)
       val scored = docs.select(col("doc_id"),
         size(array_distinct(split(col("text"), " "))).cast("long").as("quality"))
       // the cluster side is PINNED broadcast: it comes back as an RDD

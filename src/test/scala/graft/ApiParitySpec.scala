@@ -437,10 +437,15 @@ class ApiParitySpec extends AnyFunSuite {
     // and require bit-identical labels from both
     val got =
       try {
-        s.conf.set("spark.graft.cc.localEdgeThreshold", "0")
-        graft.api.Dedup.connectedComponents(edgesDf)
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      } finally s.conf.unset("spark.graft.cc.localEdgeThreshold")
+        s.conf.set("spark.graft.graph.localEdgeThreshold", "0")
+        val before = s.sparkContext.getPersistentRDDs.keySet
+        val cc = graft.api.Dedup.connectedComponents(edgesDf)
+        val labels = cc.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+        graft.api.Checkpoints.free(cc)
+        val left = s.sparkContext.getPersistentRDDs.keySet -- before
+        assert(left.isEmpty, s"the distributed loop leaves pinned RDDs after free: $left")
+        labels
+      } finally s.conf.unset("spark.graft.graph.localEdgeThreshold")
     val gotLocal = graft.api.Dedup.connectedComponents(edgesDf)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(gotLocal == got, "local union-find path must match the distributed loop")
@@ -478,7 +483,7 @@ class ApiParitySpec extends AnyFunSuite {
     // pin the conf so the tiny chain doesn't take the local fast path
     try {
       val s2 = spark
-      s2.conf.set("spark.graft.cc.localEdgeThreshold", "0")
+      s2.conf.set("spark.graft.graph.localEdgeThreshold", "0")
       val labels = graft.api.Dedup.connectedComponents(chain, maxIter = 10)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels.size == 41 && labels.values.forall(_ == 0L),
@@ -490,7 +495,7 @@ class ApiParitySpec extends AnyFunSuite {
       // non-strict mode returns the partial labels instead of throwing
       val partial = graft.api.Dedup.connectedComponents(chain, maxIter = 3, strict = false)
       assert(partial.count() == 41)
-    } finally spark.conf.unset("spark.graft.cc.localEdgeThreshold")
+    } finally spark.conf.unset("spark.graft.graph.localEdgeThreshold")
     // the default (local union-find) path must resolve the same chain
     val local = graft.api.Dedup.connectedComponents(chain)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap

@@ -88,7 +88,7 @@ class CheckpointPostureSpec extends AnyFunSuite {
   test("reliable posture: CC loop evicted after EVERY round still converges exactly") {
     withConf(
       "spark.graft.checkpoint.reliable" -> "true",
-      "spark.graft.cc.localEdgeThreshold" -> "0", // force the distributed loop
+      "spark.graft.graph.localEdgeThreshold" -> "0", // force the distributed loop
       "spark.graft.cc.testEvictEachRound" -> "true") {
       val labels = graft.api.Dedup.connectedComponents(chainPairs)
       val got = labels.collect().map(r => (r.getLong(0), r.getLong(1))).toMap
@@ -101,7 +101,7 @@ class CheckpointPostureSpec extends AnyFunSuite {
 
   test("local posture: the same evicted CC loop dies mid-flight") {
     withConf(
-      "spark.graft.cc.localEdgeThreshold" -> "0",
+      "spark.graft.graph.localEdgeThreshold" -> "0",
       "spark.graft.cc.testEvictEachRound" -> "true") {
       intercept[Exception] {
         val labels = graft.api.Dedup.connectedComponents(chainPairs)

@@ -71,9 +71,17 @@ class ContractSpec extends AnyFunSuite {
   }
 
   test("every query runs on sf0.001 and returns a deterministic row count") {
+    // and frees every pin it made: after Checkpoints.free(result), no
+    // RDD the key persisted may still be persisted
+    val sc = TestSpark.spark.sparkContext
     SparkEntry.queries.foreach { case (name, fn) =>
-      val n1 = fn(TestSpark.spark, TestSpark.sf0001).count()
+      val before = sc.getPersistentRDDs.keySet
+      val df = fn(TestSpark.spark, TestSpark.sf0001)
+      val n1 = df.count()
       assert(n1 >= 0, s"$name failed")
+      graft.api.Checkpoints.free(df)
+      val left = sc.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name leaves ${left.size} pinned RDDs after free: $left")
     }
   }
 }

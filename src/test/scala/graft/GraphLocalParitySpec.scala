@@ -31,16 +31,25 @@ class GraphLocalParitySpec extends AnyFunSuite {
     es.toDF("src", "dst", "w")
   }
 
-  /** Run `f` on both paths and assert identical (schema + row multiset). */
+  /** Run `f` on both paths and assert identical (schema + row multiset),
+    * and that each path leaves no pinned RDD behind once its result is
+    * collected and `Checkpoints.free`d. */
   private def assertParity(name: String)(f: => DataFrame): Unit = {
-    val local = f
+    def run(path: String): (Seq[org.apache.spark.sql.Row], org.apache.spark.sql.types.StructType) = {
+      val before = spark.sparkContext.getPersistentRDDs.keySet
+      val d = f
+      val rows = d.collect().toSeq
+      graft.api.Checkpoints.free(d)
+      val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+      assert(left.isEmpty, s"$name ($path path) leaves pinned RDDs after free: $left")
+      (rows, d.schema)
+    }
     assert(spark.conf.get(key, "2000000").toLong > 0,
       "parity harness expects the default (local) posture outside withLoop")
-    val localRows = local.collect().toSeq
-    val localSchema = local.schema
+    val (localRows, localSchema) = run("local")
     spark.conf.set(key, "0")
     val (loopRows, loopSchema) =
-      try { val d = f; (d.collect().toSeq, d.schema) }
+      try run("loop")
       finally spark.conf.unset(key)
     // names + types must match; NULLABILITY may differ (a LocalRelation
     // from driver tuples is non-nullable where a join's coalesce output
