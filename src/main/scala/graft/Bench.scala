@@ -201,7 +201,7 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     locally {
       import org.apache.spark.sql.functions.{col, count, lit}
-      val reg = spark.read.parquet(s"$sfDir/region.parquet")
+      val reg = Tables.region(spark, sfDir)
       val c0 = reg.columns.head
       reg.as("a").join(reg.as("b"), col(s"a.$c0") === col(s"b.$c0"))
         .agg(count(lit(1))).collect()

@@ -37,6 +37,32 @@ object GraftSession {
     // stock reference session can share the context (TestSpark.stock)
     val spark = builder.withExtensions(new GraftExtensions()).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    quietUnpersistNotice
     spark
+  }
+
+  /** Denies, once per JVM, the WARN Spark logs each time a locally
+    * checkpointed RDD is unpersisted. `Checkpoints.free` does that for
+    * every freed local pin, by design, so the notice carries no signal
+    * (it was most of a bench's stderr). The filter sits on the whole
+    * log4j configuration of Spark's logger context and matches the
+    * message, not the logger (that is the RDD's class), so every other
+    * WARN still logs. log4j asks a context-wide filter before the logger
+    * level, i.e. on every logging call, disabled DEBUG ones included; it
+    * matches the raw message (`useRawMsg`) so no call's parameters are
+    * formatted for it. Spark hands slf4j the finished string, so the
+    * raw message is the notice itself. */
+  private lazy val quietUnpersistNotice: Unit = {
+    import org.apache.logging.log4j.LogManager
+    import org.apache.logging.log4j.core.{Filter, LoggerContext}
+    import org.apache.logging.log4j.core.filter.RegexFilter
+    LogManager.getContext(classOf[org.apache.spark.rdd.RDD[_]].getClassLoader, false) match {
+      case ctx: LoggerContext =>
+        ctx.getConfiguration.addFilter(RegexFilter.createFilter(
+          "RDD \\d+ was locally checkpointed, its lineage has been truncated.*",
+          null, true, Filter.Result.DENY, Filter.Result.NEUTRAL))
+        ctx.updateLoggers()
+      case _ => // not log4j2 core: nothing to filter
+    }
   }
 }

@@ -1,19 +1,75 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central fixture-table loaders (SURVEY §1.2).
   *
-  * Every query reads through here so scale-sensitive decisions (the
-  * events nanosecond fix, future bucketing/partition hints) live in ONE
-  * place. All loads are plain parquet scans — Catalyst pushes filters
-  * and prunes columns declared downstream, so these stay cheap at any
-  * scale factor.
+  * Every query reads through here (HarnessSpec guards it) so
+  * scale-sensitive decisions (the events nanosecond fix, future
+  * bucketing/partition hints) live in ONE place. All loads are plain
+  * parquet scans — Catalyst pushes filters and prunes columns declared
+  * downstream, so these stay cheap at any scale factor.
+  *
+  * Schema cache: `spark.read.parquet(file)` without a schema runs a
+  * one-task Spark job per call to read the footer and infer the schema
+  * (about 0.1 s, on every load of every key). The first load of a file
+  * keeps Spark's own inferred schema, and later loads pass it with
+  * `spark.read.schema(...)`, which plans without a job. An entry is
+  * reused only while its key still holds:
+  *  - the file's qualified path, and its length and modification time
+  *    (a Hadoop `FileSystem` stat on every load, so a rewritten file is
+  *    inferred again and replaces its entry);
+  *  - the session's values of the confs in [[inferenceConfs]].
+  * Entries live for the JVM, one per (file, conf values), so the map is
+  * bounded by the fixture files. A directory, or a missing path (Spark
+  * then raises its own error), is read with plain inference. Each load
+  * still builds a new relation with fresh attribute ids, so self-joins
+  * plan as before.
   */
 object Tables {
-  private def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** The confs whose session values change what parquet inference
+    * returns for the same file. */
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.caseSensitive")
+
+  /** (qualified path, inference conf values) -> ((length, mtime), schema) */
+  private val inferred = new ConcurrentHashMap[(String, Seq[String]), ((Long, Long), StructType)]()
+
+  private[graft] def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val file = try Some(fs.getFileStatus(p)).filter(_.isFile)
+      catch { case _: java.io.FileNotFoundException => None }
+    file match {
+      case None => spark.read.parquet(path) // a directory, or Spark's own missing-path error
+      case Some(st) =>
+        val key = (fs.makeQualified(p).toString,
+          inferenceConfs.map(k => spark.conf.getOption(k).orNull))
+        val stamp = (st.getLen, st.getModificationTime)
+        Option(inferred.get(key)).filter(_._1 == stamp) match {
+          case Some((_, schema)) => spark.read.schema(schema).parquet(path)
+          case None =>
+            val df = spark.read.parquet(path)
+            inferred.put(key, (stamp, df.schema))
+            df
+        }
+    }
+  }
+
+  /** The fixture table `name`, with the per-table handling of its named
+    * loader (`events` goes through [[events]]). */
+  def byName(s: SparkSession, d: String, name: String): DataFrame =
+    if (name == "events") events(s, d) else load(s, d, name)
 
   def region(s: SparkSession, d: String): DataFrame   = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = load(s, d, "nation")

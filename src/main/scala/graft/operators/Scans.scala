@@ -506,9 +506,8 @@ object Scans {
       val names = Seq("region", "nation", "customer", "supplier", "part",
         "orders", "lineitem", "events", "documents", "embeddings")
       names.map { n =>
-        val df = if (n == "events") Tables.events(s, d)
-                 else s.read.parquet(s"$d/$n.parquet")
-        df.agg(count(lit(1)).as("n")).select(lit(n).as("tbl"), col("n"))
+        Tables.byName(s, d, n).agg(count(lit(1)).as("n"))
+          .select(lit(n).as("tbl"), col("n"))
       }.reduce(_ unionByName _).orderBy("tbl")
     }),
     "data_kanonymity_report" -> ((s, d) => {

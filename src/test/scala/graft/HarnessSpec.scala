@@ -115,4 +115,49 @@ class HarnessSpec extends AnyFunSuite {
     assert(hits == Map("GraftSession.scala" -> 1, "TestSpark.scala" -> 1),
       s"a session is built outside GraftSession: $hits")
   }
+
+  test("fixture tables are read only through Tables") {
+    // a fixture path is an s-string under the sf dir (`d` or `sfDir`);
+    // graft.tools generators write fixtures of their own and read them back
+    val fixture = """s"\$\{?(?:d|sfDir)\}?/[^"]*\.parquet""".r
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
+    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    val hits = files.filterNot(_.toString.contains("/graft/tools/")).flatMap { p =>
+      val n = fixture.findAllIn(java.nio.file.Files.readString(p)).size
+      if (n == 0) None else Some(p.getFileName.toString -> n)
+    }.toMap
+    assert(hits.keySet == Set("Tables.scala"), s"a fixture is read outside Tables: $hits")
+  }
+
+  test("GraftSession drops the locally-checkpointed unpersist notice and no other WARN") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val s = spark
+    val ctx = LogManager.getContext(
+      classOf[org.apache.spark.rdd.RDD[_]].getClassLoader, false).asInstanceOf[LoggerContext]
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("harness-capture", null, null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = seen.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    try {
+      val rdd = s.sparkContext.parallelize(1 to 10, 2).map(_ + 1).localCheckpoint()
+      rdd.count()
+      rdd.unpersist(blocking = true)
+      org.slf4j.LoggerFactory.getLogger(rdd.getClass).warn("an unrelated warning")
+    } finally {
+      root.removeAppender("harness-capture")
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    val msgs = seen.asScala.toList
+    assert(!msgs.exists(_.contains("was locally checkpointed")), s"notice logged: $msgs")
+    assert(msgs.contains("an unrelated warning"), s"other WARNs must still log: $msgs")
+  }
 }
