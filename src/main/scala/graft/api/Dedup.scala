@@ -11,10 +11,8 @@ object Dedup {
 
   /** Exact Jaccard via the native codegen expression (no UDF boundary);
     * bit-identical to Kernels.jaccardLongs. */
-  private def jac(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.functions.JaccardSim.register(df.sparkSession)
+  private def jac(a: Column, b: Column): Column =
     call_function("graft_jaccard", a, b)
-  }
   /** Exact-duplicate groups keyed on a content hash; shuffle carries
     * one 128-bit hash per row, never the content. */
   def exactGroups(df: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -138,7 +136,7 @@ object Dedup {
       cand
         .join(pin(docs.select(col("_id").as("id1"), col("_h").as("_h1"))), "id1")
         .join(pin(docs.select(col("_id").as("id2"), col("_h").as("_h2"))), "id2")
-        .withColumn("jaccard", jac(sized)(col("_h1"), col("_h2")))
+        .withColumn("jaccard", jac(col("_h1"), col("_h2")))
         .filter(col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
     else
@@ -155,7 +153,7 @@ object Dedup {
         .join(docs.select(col("_id").as("id1"), col("_h").as("_h1")), "id1")
         .join(docs.select(col("_id").as("id2"), col("_h").as("_h2"))
           .hint("shuffle_hash"), "id2")
-        .withColumn("jaccard", jac(sized)(col("_h1"), col("_h2")))
+        .withColumn("jaccard", jac(col("_h1"), col("_h2")))
         .filter(col("jaccard") >= threshold)
         .select("id1", "id2", "jaccard")
   }
@@ -219,7 +217,6 @@ object Dedup {
       // the 3.2 s candidate stage at sf0.1 (7.3 M raw → 1.66 M
       // distinct). The candidate SET is unchanged (row-count asserted
       // equal at sf0.1: 1 656 277).
-      graft.functions.MinCommonLong.register(prefix.sparkSession)
       val p = prefix.filter(col("_df") >= 2)
         .withColumn("_nk",
           least(lit(1024L), ceil(col("_df") / lit(256.0))).cast("int"))
@@ -449,7 +446,6 @@ object Dedup {
       .select(col("_id"), col("_grp"), col("_h"), size(col("_h")).cast("long").as("_sz")))
     val cand = containmentCandStage(sized, threshold, pin,
       chunked = !broadcastJoins)
-    graft.functions.ContainmentSim.register(df.sparkSession)
     val docs = sized.select(col("_id"), col("_h"))
     val verified =
       if (broadcastJoins)
@@ -658,7 +654,7 @@ object Dedup {
     cand
       .join(pin(idx.select(col("_id").as("index_id"), col("_h").as("_h1"))), "index_id")
       .join(pin(prb.select(col("_id").as("probe_id"), col("_h").as("_h2"))), "probe_id")
-      .withColumn("jaccard", jac(probe)(col("_h1"), col("_h2")))
+      .withColumn("jaccard", jac(col("_h1"), col("_h2")))
       .filter(col("jaccard") >= threshold)
       .select("index_id", "probe_id", "jaccard")
   }
@@ -713,7 +709,6 @@ object Dedup {
     // the pipeline (~20M rows for 5k docs at sf0.1), so the first-
     // agreement test is the native codegen FirstEqIndex (fused loop,
     // early exit) rather than an allocating zip_with lambda.
-    graft.functions.FirstEqIndex.register(df.sparkSession)
     val firstBand = call_function("graft_first_eq", col("_sig1"), col("_sig2"))
     val cand = x.join(pin(y), col("_band") === col("_band2") && col("_bh") === col("_bh2")
         && col("id1") < col("id2"))
@@ -722,7 +717,7 @@ object Dedup {
     cand
       .join(pin(docs.select(col("_id").as("id1"), col("_th").as("_t1"))), "id1")
       .join(pin(docs.select(col("_id").as("id2"), col("_th").as("_t2"))), "id2")
-      .withColumn("jaccard", jac(df)(col("_t1"), col("_t2")))
+      .withColumn("jaccard", jac(col("_t1"), col("_t2")))
       .filter(col("jaccard") >= threshold)
       .select("id1", "id2", "jaccard")
   }
@@ -808,7 +803,6 @@ object Dedup {
       broadcastJoins: Boolean): DataFrame = {
     def pin(side: DataFrame): DataFrame =
       if (broadcastJoins) broadcast(side) else side.hint("shuffle_hash")
-    graft.functions.FirstEqIndex.register(prbDocs.sparkSession)
     val firstBand = call_function("graft_first_eq", col("_sigP"), col("_sigI"))
     val cand = prbBanded
       .select(col("_id").as("probe_id"), col("_sig").as("_sigP"), col("_band"), col("_bh"))
@@ -820,7 +814,7 @@ object Dedup {
     cand
       .join(pin(idxDocs.select(col("_id").as("index_id"), col("_th").as("_t1"))), "index_id")
       .join(pin(prbDocs.select(col("_id").as("probe_id"), col("_th").as("_t2"))), "probe_id")
-      .withColumn("jaccard", jac(prbDocs)(col("_t1"), col("_t2")))
+      .withColumn("jaccard", jac(col("_t1"), col("_t2")))
       .filter(col("jaccard") >= threshold)
       .select("index_id", "probe_id", "jaccard")
   }

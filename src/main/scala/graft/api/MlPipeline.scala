@@ -102,17 +102,17 @@ object MlPipeline {
     val bcW = spark.sparkContext.broadcast(weights)
     // the float encoder, NOT cast("array<double>"): the Catalyst cast
     // materializes a second array per row before the encoder copies it
-    // again — measured (tools/GemmProbe) as a real slice of the
-    // per-row cost at this FLOP count. Floats widen to double in the
-    // pack loop below, bit-identically to the cast.
+    // again — measured as a real slice of the per-row cost at this
+    // FLOP count (SURVEY's `ml_infer_multiclass_gemm` row). Floats widen
+    // to double in the pack loop below, bit-identically to the cast.
     //
     // `fanout = false` skips the parallelizing repartition: a columnar
     // scan at scale arrives pre-split by row group, so the exchange
     // only ever fires on small single-file inputs — exactly where its
-    // fixed stage cost can never amortize (GemmProbe: the exchange IS
-    // the entire gap between this path and the boxed UDF at fixture
-    // scale). Keep the default true for callers whose input may be a
-    // single UNSPLITTABLE large file (the SURVEY §7.2 #8 trap).
+    // fixed stage cost can never amortize (same SURVEY row: the
+    // exchange IS the entire gap between this path and the boxed UDF
+    // at fixture scale). Keep the default true for callers whose input
+    // may be a single UNSPLITTABLE large file (the SURVEY §7.2 #8 trap).
     val in0 = df.select(col(idCol).cast("long"), col(vecCol))
     val in = if (fanout) Fanout(in0) else in0
     in.as[(Long, Array[Float])]
@@ -189,7 +189,7 @@ object MlPipeline {
     import spark.implicits._
     val bcW = spark.sparkContext.broadcast((w1, b1, w2, b2))
     // float encoder + optional fanout: same measured rationale as
-    // multiclassScoreBatchGemm (tools/GemmProbe)
+    // multiclassScoreBatchGemm (SURVEY `ml_infer_multiclass_gemm` row)
     val in0 = df.select(col(idCol).cast("long"), col(vecCol))
     val in = if (fanout) Fanout(in0) else in0
     in.as[(Long, Array[Float])]

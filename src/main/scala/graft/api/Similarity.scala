@@ -20,10 +20,8 @@ object Similarity {
 
   /** Cosine via the native codegen expression (no UDF boundary);
     * bit-identical to Kernels.cosineArr. */
-  private def cos(df: DataFrame)(a: Column, b: Column): Column = {
-    graft.functions.CosineSim.register(df.sparkSession)
+  private def cos(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
-  }
 
   /** Global top-k most-similar pairs, brute force (broadcast × fanout).
     * The exactness baseline and the per-bucket inner loop of an
@@ -34,7 +32,7 @@ object Similarity {
       simRound: Option[Int] = None): DataFrame = {
     val a = fanout(df).select(col(idCol).as("id1"), col(vecCol).as("_e1"))
     val b = df.select(col(idCol).as("id2"), col(vecCol).as("_e2"))
-    val sim = cos(df)(col("_e1"), col("_e2"))
+    val sim = cos(col("_e1"), col("_e2"))
     a.join(broadcast(b), col("id1") < col("id2"))
       .select(col("id1"), col("id2"),
         simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
@@ -73,7 +71,7 @@ object Similarity {
     val radii = collectRadii(vecs)
     val a = vecs.select(col("_vid").as("id1"), col("_v").as("_va"), col("_cell"))
     val b = vecs.select(col("_vid").as("id2"), col("_v").as("_vb"), col("_cell"))
-    val sim = cos(vecs)(col("_va"), col("_vb"))
+    val sim = cos(col("_va"), col("_vb"))
     val localTopK = a.join(b, Seq("_cell")).filter(col("id1") < col("id2"))
       .select(col("id1"), col("id2"),
         simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
@@ -108,7 +106,6 @@ object Similarity {
   def maxSimKnn(df: DataFrame, idCol: String, vecCol: String,
       queryPred: Column, m: Int, k: Int,
       simRound: Option[Int] = None): DataFrame = {
-    graft.functions.MaxSimScore.register(df.sparkSession)
     val q = df.filter(queryPred).select(col(idCol).as("qid"), col(vecCol).as("_qe"))
     val c = fanout(df).select(col(idCol).as("cid"), col(vecCol).as("_ce"))
     val raw = call_function("graft_maxsim", col("_qe"), col("_ce"), lit(m))
@@ -126,7 +123,7 @@ object Similarity {
     val q = df.filter(queryPred).select(col(idCol).as("qid"), col(vecCol).as("_qe"))
     val c = fanout(df).select(col(idCol).as("cid"), col(vecCol).as("_ce"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(df)(col("_qe"), col("_ce"))
+    val sim = cos(col("_qe"), col("_ce"))
     c.join(broadcast(q), col("qid") =!= col("cid"))
       .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -163,7 +160,7 @@ object Similarity {
       .withColumn("_d2", d2)
       .withColumn("_crn", row_number().over(wCoarse))
       .filter(col("_crn") <= shortlist)
-    val sim = cos(df)(col("_qe"), col("_ce"))
+    val sim = cos(col("_qe"), col("_ce"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
     short.withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -176,31 +173,15 @@ object Similarity {
       groupCol: String, minSim: Double, simRound: Option[Int] = None): DataFrame = {
     val a = fanout(df).select(col(idCol).as("id1"), col(groupCol).as("_g1"), col(vecCol).as("_e1"))
     val b = df.select(col(idCol).as("id2"), col(groupCol).as("_g2"), col(vecCol).as("_e2"))
-    val sim = cos(df)(col("_e1"), col("_e2"))
+    val sim = cos(col("_e1"), col("_e2"))
     a.join(broadcast(b), col("_g1") === col("_g2") && col("id1") < col("id2"))
       .select(col("id1"), col("id2"), col("_g1").as(groupCol),
         simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
       .filter(col("sim") >= minSim)
   }
 
-  /** All pairs with cosine ≥ minSim, no blocking key — embedding-space
-    * near-duplicate candidates. The exact baseline; at 100 TB route
-    * through `ivfKnn`-style cell assignment so only same/adjacent-cell
-    * pairs are compared. */
-  def cosinePairsAbove(df: DataFrame, idCol: String, vecCol: String,
-      minSim: Double, simRound: Option[Int] = None): DataFrame = {
-    val a = fanout(df).select(col(idCol).as("id1"), col(vecCol).as("_e1"))
-    val b = df.select(col(idCol).as("id2"), col(vecCol).as("_e2"))
-    val sim = cos(df)(col("_e1"), col("_e2"))
-    a.join(broadcast(b), col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
-      .filter(col("sim") >= minSim)
-  }
-
   /** EXACT all-pairs cosine ≥ minSim through cell-pair pruning — the
-    * blocked twin of `cosinePairsAbove` whose output is guaranteed
-    * identical on ANY data:
+    * same pairs as an unblocked all-pairs cosine filter on ANY data:
     *
     *  1. every vector is assigned to its nearest centroid cell (one
     *     map pass over a broadcast codebook) along with its angle to
@@ -304,7 +285,7 @@ object Similarity {
     val allowed = allowedPairs.toDF("_ca", "_cbAllowed")
     val a = vecs.select(col("_vid").as("_ida"), col("_v").as("_va"), col("_cell").as("_ca"))
     val b = vecs.select(col("_vid").as("_idb"), col("_v").as("_vb"), col("_cell").as("_cb"))
-    val sim = cos(vecs)(col("_va"), col("_vb"))
+    val sim = cos(col("_va"), col("_vb"))
     a.join(broadcast(allowed), "_ca")
       .join(b, col("_cbAllowed") === col("_cb") && (col("_ca") < col("_cbAllowed")
         || (col("_ca") === col("_cbAllowed") && col("_ida") < col("_idb"))))
@@ -382,7 +363,7 @@ object Similarity {
     })
     val probes = fanout(batch).select(col(idCol).as("_bid"), col(vecCol).as("_bv"))
       .withColumn("_cell", explode(probeCells(col("_bv"))))
-    val sim = cos(batch)(col("_bv"), col("_cv"))
+    val sim = cos(col("_bv"), col("_cv"))
     probes.join(corp.drop("_ang"), "_cell")
       .select(col("_bid").as("id1"), col("_cid").as("id2"),
         simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
@@ -410,7 +391,7 @@ object Similarity {
       .select(col(idCol).as("qid"), col(vecCol).as("_qe"))
       .withColumn("_probe", explode(probesOf(col("_qe"))))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(df)(col("_qe"), col("_ce"))
+    val sim = cos(col("_qe"), col("_ce"))
     cands.join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
       .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -486,7 +467,7 @@ object Similarity {
       .select(col("_vid").as("qid"), col("_v").as("_qe"))
       .withColumn("_probe", explode(probesOf(col("_qe"))))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(assigned)(col("_qe"), col("_ce"))
+    val sim = cos(col("_qe"), col("_ce"))
     val rows = assigned
       .select(col("_vid").as("cid"), col("_v").as("_ce"), col("_cell"))
       .join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
@@ -530,20 +511,6 @@ object Similarity {
     val first = ladder.indexWhere(_ >= target)
     val needed = if (first < 0) ladder.length else first + 1
     math.min(ladder.length, math.max(baseNprobe, needed))
-  }
-
-  /** [[ivfKnn]] behind the [[routedNprobe]] measured gate: calibrates
-    * the ladder for this corpus/codebook, routes the probe width, and
-    * runs the standard IVF probe. The in-memory twin of the persisted
-    * route ([[ivfKnnFromIndexRouted]], where the ladder was paid for
-    * once at build time). */
-  def ivfKnnRouted(df: DataFrame, idCol: String, vecCol: String,
-      queryPred: Column, k: Int, centroids: Array[Array[Float]],
-      baseNprobe: Int, simRound: Option[Int] = None,
-      target: Double = RoutedRecallTarget): DataFrame = {
-    val ladder = probeRecallLadder(df, idCol, vecCol, centroids, k)
-    ivfKnn(df, idCol, vecCol, queryPred, k, centroids,
-      routedNprobe(ladder, baseNprobe, target), simRound)
   }
 
   /** Persist an IVF index to `path`: the codebook as a tiny parquet
@@ -726,7 +693,7 @@ object Similarity {
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("_qe"))
       .withColumn("_probe", explode(probesOf(col("_qe"))))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(queries)(col("_qe"), col("_ce"))
+    val sim = cos(col("_qe"), col("_ce"))
     cands.join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
       .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -785,7 +752,6 @@ object Similarity {
         h
       }.toSeq
     })
-    graft.functions.FirstEqIndex.register(df.sparkSession)
     val data = fanout(df).select(col(idCol).as("cid"), col(vecCol).as("_ce"))
       .withColumn("_sig", sigUdf(col("_ce")))
       .select(col("cid"), col("_ce"), col("_sig"),
@@ -796,7 +762,7 @@ object Similarity {
       .select(col("qid"), col("_qe"), col("_qsig"),
         posexplode(col("_qsig")).as(Seq("_qt", "_qh")))
     val firstTable = call_function("graft_first_eq", col("_sig"), col("_qsig"))
-    val sim = cos(df)(col("_qe"), col("_ce"))
+    val sim = cos(col("_qe"), col("_ce"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
     data.join(broadcast(q), col("_t") === col("_qt") && col("_h") === col("_qh")
         && col("qid") =!= col("cid"))
@@ -1038,7 +1004,7 @@ object Similarity {
     // exact re-rank: fetch the shortlist's raw vectors by id (selective
     // equi-join, rerank·|queries| rows) and order by the codegen cosine
     val cand = df.select(col(idCol).as("cid"), col(vecCol).as("_ce"))
-    val sim = cos(df)(col("_qe"), col("_ce"))
+    val sim = cos(col("_qe"), col("_ce"))
     val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
     cand.join(broadcast(shortlist), "cid")
       .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))

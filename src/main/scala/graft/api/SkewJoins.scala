@@ -109,7 +109,6 @@ object SkewJoins {
     val bloom = dim.stat.bloomFilter(dimKey, nKeys, fpp)
     val bos = new java.io.ByteArrayOutputStream()
     bloom.writeTo(bos)
-    graft.functions.BloomMightContain.register(fact.sparkSession)
     val probe = call_function("graft_bloom_probe",
       col(factKey).cast("long"), lit(bos.toByteArray))
     fact.filter(probe)

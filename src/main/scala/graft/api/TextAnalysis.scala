@@ -7,13 +7,6 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 object TextAnalysis {
-  /** Whitespace token stats per group. */
-  def tokenStats(df: DataFrame, textCol: String, groupCol: String): DataFrame =
-    df.select(col(groupCol), size(split(col(textCol), " ")).cast("long").as("_n_tok"))
-      .groupBy(groupCol)
-      .agg(count(lit(1)).as("n_docs"), sum(col("_n_tok")).as("n_tokens"),
-        (sum(col("_n_tok")) / count(lit(1))).as("avg_tokens"))
-
   /** Per-doc quality signals: token-type ratio, average token length,
     * stopword ratio, BPE-ish size estimate (chars/4 — the standard
     * subword approximation), vowel density. All ratios of exact

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -49,14 +48,4 @@ case class BloomMightContain(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): BloomMightContain =
     copy(newLeft, newRight)
-}
-
-object BloomMightContain {
-  /** Register `graft_bloom_probe` so the predicate is reachable from
-    * the Column API via `call_function(key, lit(bytes))` and from SQL
-    * text. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_bloom_probe", exprs => BloomMightContain(exprs(0), exprs(1)),
-      "built-in")
 }

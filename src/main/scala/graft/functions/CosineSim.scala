@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -59,13 +58,4 @@ case class CosineSim(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): CosineSim = copy(newLeft, newRight)
-}
-
-object CosineSim {
-  /** Register `graft_cosine` in the session's function registry so the
-    * expression is reachable from the Column API via call_function and
-    * from SQL text. Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_cosine", exprs => CosineSim(exprs(0), exprs(1)), "built-in")
 }

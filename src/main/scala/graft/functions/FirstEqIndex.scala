@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -62,12 +61,4 @@ case class FirstEqIndex(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): FirstEqIndex = copy(newLeft, newRight)
-}
-
-object FirstEqIndex {
-  /** Register `graft_first_eq` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_first_eq", exprs => FirstEqIndex(exprs(0), exprs(1)), "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -57,12 +56,4 @@ case class JaccardSim(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): JaccardSim = copy(newLeft, newRight)
-}
-
-object JaccardSim {
-  /** Register `graft_jaccard` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_jaccard", exprs => JaccardSim(exprs(0), exprs(1)), "built-in")
 }

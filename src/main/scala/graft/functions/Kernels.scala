@@ -442,13 +442,8 @@ object Kernels {
   /** Cosine between a row vector and a codebook entry (cell math). */
   def cosineWith(v: Seq[Float], c: Array[Float]): Double = cosineArr(floats(v), c)
 
-  val cosineUdf = udf((a: Seq[Float], b: Seq[Float]) => cosineArr(floats(a), floats(b)))
-  val dotUdf    = udf((a: Seq[Float], b: Seq[Float]) => dotArr(floats(a), floats(b)))
-  val normUdf   = udf((a: Seq[Float]) => normArr(floats(a)))
-  val jaccardUdf = udf((a: Seq[String], b: Seq[String]) => jaccardSets(a, b))
-  val jaccardSortedUdf = udf((a: Seq[String], b: Seq[String]) => jaccardSorted(a, b))
+  val normUdf = udf((a: Seq[Float]) => normArr(floats(a)))
   val tokenHashesUdf = udf((toks: Seq[String]) => tokenHashes(toks))
-  val jaccardLongsUdf = udf((a: Seq[Long], b: Seq[Long]) => jaccardLongs(a, b))
   def minhashBandsUdf(bands: Int, rows: Int) =
     udf((hashes: Seq[Long]) => minhashBands(hashes, bands, rows))
   val simhashUdf = udf((hashes: Seq[Long]) => simhash64(hashes))
@@ -456,10 +451,7 @@ object Kernels {
   def simhashChunksUdf(bands: Int) = udf((sh: Long) => simhashChunks(sh, bands))
   def charNgramHashesUdf(n: Int) = udf((t: String) => charNgramHashes(t, n))
 
-  def cosine(a: Column, b: Column): Column = cosineUdf(a, b)
-  def dot(a: Column, b: Column): Column    = dotUdf(a, b)
-  def l2norm(a: Column): Column            = normUdf(a)
-  def jaccard(a: Column, b: Column): Column = jaccardUdf(a, b)
+  def l2norm(a: Column): Column = normUdf(a)
 
   /** σ(w·x) against a fixed weight vector captured in the closure (the
     * reference's broadcast-weights forward pass; at cluster scale the

@@ -1,8 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
@@ -81,21 +80,4 @@ case class MaxSimScore(left: Expression, right: Expression, m: Int)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): MaxSimScore =
     copy(newLeft, newRight, m)
-}
-
-object MaxSimScore {
-  /** Register `graft_maxsim(a, b, m)` — `m` must be an int literal
-    * (the sub-vector count is a plan-time constant). Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_maxsim", exprs => {
-        require(exprs.length == 3,
-          s"graft_maxsim expects (array<float>, array<float>, m: int literal), got ${exprs.length} argument(s)")
-        val m = exprs(2) match {
-          case Literal(v: Int, IntegerType) => v
-          case other => throw new IllegalArgumentException(
-            s"graft_maxsim sub-vector count must be an int literal, got $other")
-        }
-        MaxSimScore(exprs(0), exprs(1), m)
-      }, "built-in")
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -70,12 +69,4 @@ case class MinCommonLong(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): MinCommonLong = copy(newLeft, newRight)
-}
-
-object MinCommonLong {
-  /** Register `graft_min_common` in the session's function registry.
-    * Idempotent. */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "graft_min_common", exprs => MinCommonLong(exprs(0), exprs(1)), "built-in")
 }

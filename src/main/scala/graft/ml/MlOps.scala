@@ -400,9 +400,9 @@ object MlOps {
       // fanout=false: a parquet scan at scale arrives pre-split by row
       // group, so the parallelizing exchange only fires on tiny
       // single-file fixtures — where its fixed stage cost is exactly
-      // what kept the k=1 GEMM behind the boxed UDF (tools/GemmProbe:
-      // the exchange is the whole gap; scan-parallel GEMM ties the UDF
-      // at 5k rows and beats it at 200k).
+      // what kept the k=1 GEMM behind the boxed UDF (SURVEY's row for
+      // this key: the exchange is the whole gap; scan-parallel GEMM ties
+      // the UDF at 5k rows and beats it at 200k).
       MlPipeline.multiclassScoreBatchGemm(Tables.embeddings(s, d),
           "vec_id", "embedding", weightsK, fanout = false)
         .select(col("vec_id"), col("pred"), Canon.r4(col("p_max")).as("p_max"))

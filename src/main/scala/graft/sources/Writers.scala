@@ -103,7 +103,7 @@ object Writers {
     import org.apache.spark.sql.functions.col
     // Two silent pruning killers normalized at write time, because this
     // layout exists ONLY for min/max skipping (measured in
-    // WritePathSpec / tools/MinMaxProbe):
+    // WritePathSpec / SURVEY §7.2 #12):
     //  - Spark's default parquet timestamp encoding is INT96, which
     //    carries no usable column statistics. Write µs INT64.
     //  - a TIMESTAMP_NTZ range column never prunes: Spark's parquet

@@ -11,14 +11,42 @@ class ExtensionsSpec extends AnyFunSuite {
 
   test("graft functions are registered by the extension (SQL text, no register call)") {
     val s = TestSpark.spark
+    val bloom = org.apache.spark.util.sketch.BloomFilter.create(100)
+    bloom.putLong(7L)
+    val bytes = new java.io.ByteArrayOutputStream()
+    bloom.writeTo(bytes)
+    val bloomHex = bytes.toByteArray.map(b => f"${b & 0xff}%02X").mkString
     val r = s.sql(
-      """SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
-        |                    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
-        |       graft_jaccard(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS j,
-        |       graft_token_count('a b  c ') AS t""".stripMargin).head()
+      s"""SELECT graft_cosine(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)),
+         |                    array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT))) AS c,
+         |       graft_jaccard(array(1L, 2L, 3L), array(2L, 3L, 4L)) AS j,
+         |       graft_token_count('a b  c ') AS t,
+         |       graft_containment(array(1L, 2L, 3L, 4L), array(2L, 3L)) AS ct,
+         |       graft_maxsim(array(CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT),
+         |                          CAST(0.0 AS FLOAT), CAST(1.0 AS FLOAT)),
+         |                    array(CAST(0.0 AS FLOAT), CAST(1.0 AS FLOAT),
+         |                          CAST(1.0 AS FLOAT), CAST(0.0 AS FLOAT)), 2) AS ms,
+         |       graft_min_common(array(1L, 3L, 5L), array(2L, 3L, 5L)) AS mc,
+         |       graft_first_eq(array(1L, 2L, 3L), array(0L, 2L, 3L)) AS fe,
+         |       graft_bloom_probe(7L, X'$bloomHex') AS bp""".stripMargin).head()
     assert(r.getDouble(0) == 1.0)
     assert(r.getDouble(1) == 0.5)
     assert(r.getInt(2) == 5) // 'a','b','','c','' — java split keep-trailing
+    assert(r.getDouble(3) == 0.5)
+    assert(r.getDouble(4) == 2.0) // each facet finds its swapped twin
+    assert(r.getLong(5) == 3L)
+    assert(r.getInt(6) == 2)
+    assert(r.getBoolean(7))
+  }
+
+  test("a graft function called with the wrong argument count names itself and its arity") {
+    val err = intercept[Exception] {
+      TestSpark.spark.sql("SELECT graft_cosine(array(CAST(1.0 AS FLOAT)))").collect()
+    }
+    val msgs = Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .flatMap(t => Option(t.getMessage)).toList
+    assert(msgs.exists(m => m.contains("graft_cosine") && m.contains("expects 2 argument")),
+      s"unhelpful arity error: $msgs")
   }
 
   test("filter(row_number <= k) plans as TopKPerGroupExec and matches the window result") {

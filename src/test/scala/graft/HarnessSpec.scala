@@ -13,6 +13,12 @@ class HarnessSpec extends AnyFunSuite {
   private def spark = TestSpark.spark
   private val sf = TestSpark.sf0001
 
+  private def scalaSources(dir: String): List[java.nio.file.Path] = {
+    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
   private val good: (SparkSession, String) => DataFrame =
     (s, _) => s.range(3).toDF("id")
   private val broken: (SparkSession, String) => DataFrame =
@@ -104,11 +110,7 @@ class HarnessSpec extends AnyFunSuite {
   test("SparkSession is built only in GraftSession and TestSpark.stock") {
     // split literal, so this file does not match itself
     val call = java.util.regex.Pattern.quote("SparkSession" + ".builder()").r
-    val hits = Seq("src/main", "src/test").flatMap { dir =>
-      val walk = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    }.flatMap { p =>
+    val hits = Seq("src/main", "src/test").flatMap(scalaSources).flatMap { p =>
       val n = call.findAllIn(java.nio.file.Files.readString(p)).size
       if (n == 0) None else Some(p.getFileName.toString -> n)
     }.toMap
@@ -116,14 +118,27 @@ class HarnessSpec extends AnyFunSuite {
       s"a session is built outside GraftSession: $hits")
   }
 
+  test("graft_* functions are bound only by GraftExtensions") {
+    // split literal, so this file does not match itself
+    val rebind = "createOrReplace" + "TempFunction"
+    val rebinds = Seq("src/main", "src/test").flatMap(scalaSources)
+      .filter(p => java.nio.file.Files.readString(p).contains(rebind))
+      .map(_.getFileName.toString)
+    assert(rebinds.isEmpty, s"a function is registered per call: $rebinds")
+    val called = """call_function\("(graft_\w+)"""".r
+    val names = scalaSources("src/main").flatMap(p =>
+      called.findAllMatchIn(java.nio.file.Files.readString(p)).map(_.group(1))).toSet
+    assert(names.nonEmpty)
+    val missing = names.filterNot(spark.catalog.functionExists)
+    assert(missing.isEmpty, s"called but not injected by GraftExtensions: $missing")
+  }
+
   test("fixture tables are read only through Tables") {
     // a fixture path is an s-string under the sf dir (`d` or `sfDir`);
     // graft.tools generators write fixtures of their own and read them back
     val fixture = """s"\$\{?(?:d|sfDir)\}?/[^"]*\.parquet""".r
-    val walk = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main"))
-    val files = try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).toList
-      finally walk.close()
-    val hits = files.filterNot(_.toString.contains("/graft/tools/")).flatMap { p =>
+    val files = scalaSources("src/main").filterNot(_.toString.contains("/graft/tools/"))
+    val hits = files.flatMap { p =>
       val n = fixture.findAllIn(java.nio.file.Files.readString(p)).size
       if (n == 0) None else Some(p.getFileName.toString -> n)
     }.toMap

@@ -87,7 +87,6 @@ class KernelsSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.FirstEqIndex.register(spark)
     def ref(a: Seq[Long], b: Seq[Long]): Int = {
       val n = math.min(a.length, b.length)
       (0 until n).find(i => a(i) == b(i)).map(_ + 1).getOrElse(0)
@@ -108,7 +107,6 @@ class KernelsSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.MinCommonLong.register(spark)
     // reference: minimum of the set intersection, MinValue when disjoint
     def ref(a: Seq[Long], b: Seq[Long]): Long = {
       val c = a.toSet.intersect(b.toSet)
@@ -144,7 +142,6 @@ class KernelsSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.MaxSimScore.register(spark)
     // independent reference: functional Σ_i max_j dot over chunk views
     def ref(a: Seq[Float], b: Seq[Float], m: Int): Double = {
       val sub = math.min(a.length, b.length) / m
@@ -189,7 +186,6 @@ class KernelsSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.MaxSimScore.register(spark)
     intercept[IllegalArgumentException] {
       Kernels.maxSimArr(Array(1f, 2f), Array(3f, 4f), 3)
     }
@@ -219,7 +215,6 @@ class KernelsSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.ContainmentSim.register(spark)
     def ref(a: Seq[Long], b: Seq[Long]): Double =
       if (a.isEmpty) 1.0
       else a.toSet.intersect(b.toSet).size.toDouble / a.size
@@ -309,7 +304,6 @@ class KernelsSpec extends AnyFunSuite {
     val spark = TestSpark.spark
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.JaccardSim.register(spark)
     val rnd = new Random(7)
     def set() = Array.fill(rnd.nextInt(40))(rnd.nextInt(50).toLong)
       .distinct.sorted.toSeq

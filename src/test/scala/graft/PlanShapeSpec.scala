@@ -16,8 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class PlanShapeSpec extends AnyFunSuite {
 
-  private def plan(s: SparkSession, k: String): String =
-    SparkEntry.queries(k)(s, TestSpark.sf0001).queryExecution.executedPlan.toString
+  private def plan(s: SparkSession, k: String, dir: String = TestSpark.sf0001): String =
+    SparkEntry.queries(k)(s, dir).queryExecution.executedPlan.toString
 
   /** (key, any-of pattern, why) — the per-key shape contract. */
   private val shapeChecks: Seq[(String, String, String)] = Seq(
@@ -177,6 +177,47 @@ class PlanShapeSpec extends AnyFunSuite {
     }
   }
 
+  /** The same contract one scale up, where the broadcast/shuffle
+    * choices see ten times the rows: the shape rows above that must
+    * also hold at sf0.01, rows checked only at sf0.01, then the shapes
+    * that must NOT appear there. */
+  private val sf001 = s"${new java.io.File(TestSpark.sf0001).getParent}/sf0.01"
+  private val sf001Keys = Set("join_inner_broadcast", "join_inner_shufflemerge",
+    "join_multiway_revenue", "join_semi", "join_anti", "join_asof", "topk_global",
+    "agg_groupby_q1", "scan_parquet_project_filter", "sim_knn_bruteforce",
+    "stream_tumbling_counts", "window_ranks", "dedup_embed_cosine", "text_tfidf",
+    "window_topk_per_group", "sim_knn_per_query")
+  private val sf001Checks: Seq[(String, String, String)] =
+    shapeChecks.filter(r => sf001Keys(r._1)) ++ Seq(
+      ("dedup_minhash_lsh", "ShuffledHashJoin|SortMergeJoin|BroadcastHashJoin",
+        "bucket equi-join"),
+      ("text_quality_filter", "BroadcastHashJoin",
+        "binned-percentile cut broadcasts back, never a global sort"),
+      ("sim_knn_ivf_routed", "TopKPerGroup", "routed probe's rank takes the native top-k too"),
+      ("data_snapshot_expire", "HashAggregate",
+        "post-GC checksum is one hash aggregate over the survivor scan"),
+      ("data_snapshot_compact", "HashAggregate",
+        "both versions' checksums are hash aggregates"))
+  private val sf001NegChecks: Seq[(String, String, String)] = Seq(
+    ("sim_knn_bruteforce", "BroadcastNestedLoopJoin", "an unblocked O(n²) pair join"),
+    ("text_quality_filter", "ntile", "a global-sort quantile of the corpus"),
+    ("sim_knn_ivf_routed", "BroadcastNestedLoopJoin", "the routed probe must stay an equi-join")
+  )
+
+  sf001Checks.foreach { case (k, pat, why) =>
+    test(s"$k plan at sf0.01 contains ${pat.takeWhile(_ != ' ')} ($why)") {
+      val p = plan(TestSpark.spark, k, sf001)
+      assert(pat.split('|').exists(p.contains), s"expected [$pat] in plan:\n$p")
+    }
+  }
+
+  sf001NegChecks.foreach { case (k, pat, why) =>
+    test(s"$k plan at sf0.01 has no $pat ($why)") {
+      val p = plan(TestSpark.spark, k, sf001)
+      assert(!p.contains(pat), s"unexpected [$pat] in plan:\n$p")
+    }
+  }
+
   test("agg_incremental_merge: the final plan scans raw events once (delta) and partials once") {
     // the key's whole point is that history is never rescanned: the
     // merged aggregate must read the persisted partial table for the
@@ -210,7 +251,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // events frame in the shared session, and the cache manager would
     // swap this plan's scan for an InMemoryTableScan — hiding the
     // parquet PushedFilters this test exists to observe
-    val f = Tables.events(s, "/root/testdata/sf0.01")
+    val f = Tables.events(s, sf001)
       .filter(col("ts") >= lit("2024-03-01 00:00:00").cast("timestamp"))
       .select("event_type", "ts")
     val p = f.queryExecution.executedPlan.toString

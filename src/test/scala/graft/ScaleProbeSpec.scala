@@ -561,7 +561,6 @@ class ScaleProbeSpec extends AnyFunSuite {
     val nKeys = 10000L
     val bloom = dim.stat.bloomFilter("k", nKeys, 0.01)
     val bos = new java.io.ByteArrayOutputStream(); bloom.writeTo(bos)
-    graft.functions.BloomMightContain.register(spark)
     val passed = fact.filter(call_function("graft_bloom_probe",
       col("k").cast("long"), lit(bos.toByteArray))).count()
     val matches = 10000L
