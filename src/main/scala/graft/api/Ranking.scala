@@ -1,8 +1,6 @@
 package graft.api
 
-import graft.Canon
-import graft.functions.Kernels
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

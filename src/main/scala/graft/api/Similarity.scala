@@ -23,6 +23,58 @@ object Similarity {
   private def cos(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 
+  /** `sim` rounded to `simRound` decimals (Canon's grid) BEFORE any
+    * ranking or threshold, so a top-k cut or a `>= minSim` filter
+    * cannot straddle a float epsilon across engines/runs. */
+  private def rounded(sim: Column, simRound: Option[Int]): Column =
+    simRound.map(Canon.rk(sim, _)).getOrElse(sim)
+
+  /** The global top-k of a (id1, id2, sim) pair stream, ties broken by
+    * the pair ids — a bounded TakeOrdered, never a full sort. */
+  private def topKPairs(pairs: DataFrame, k: Int): DataFrame =
+    pairs.orderBy(col("sim").desc, col("id1"), col("id2")).limit(k)
+
+  /** The per-query top-k cut every kNN path ends in: the (qid, cid)
+    * candidate stream gets `score` rounded ([[rounded]]) as `scoreCol`,
+    * a long `rank` by row_number over (score desc, cid asc) per qid,
+    * and keeps rank ≤ k. It must stay exactly
+    * Filter(rank <= k, Window[row_number]) so TopKRewrite plans it as
+    * the bounded-heap TopKPerGroup. All input columns survive; the
+    * caller selects its output. */
+  private def topKPerQuery(cands: DataFrame, score: Column, k: Int,
+      simRound: Option[Int], scoreCol: String = "sim"): DataFrame = {
+    val w = Window.partitionBy("qid").orderBy(col(scoreCol).desc, col("cid").asc)
+    cands.withColumn(scoreCol, rounded(score, simRound))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+  }
+
+  /** Angle (radians) between `v` and centroid `c`, cosine clamped to
+    * [−1, 1] so float error cannot make acos NaN. */
+  private def angleTo(v: Seq[Float], c: Array[Float]): Double =
+    math.acos(math.max(-1.0, math.min(1.0, Kernels.cosineWith(v, c))))
+
+  /** Nearest-centroid cell of a vector under a frozen codebook — the
+    * one cell assignment of every IVF and cell-blocked path. Ties go to
+    * the lower cell index (`Kernels.nearestCells`). */
+  private def cellOf(centroids: Array[Array[Float]]) =
+    udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, 1).head)
+
+  /** A vector's `n` nearest cells, nearest first — the IVF probe set. */
+  private def probesOf(centroids: Array[Array[Float]], n: Int) =
+    udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, n))
+
+  /** IVF candidate pairs: each (qid, _qe) query explodes into its
+    * `nprobe` nearest cells and equi-joins the (cid, _ce, _cell)
+    * corpus on the cell id against the broadcast query side, a query
+    * never matching itself. At nprobe = |cells| it is the exact
+    * candidate set — brute force without a nested-loop join. */
+  private def ivfCandidates(cells: DataFrame, queries: DataFrame,
+      centroids: Array[Array[Float]], nprobe: Int): DataFrame = {
+    val q = queries.withColumn("_probe", explode(probesOf(centroids, nprobe)(col("_qe"))))
+    cells.join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
+  }
+
   /** Global top-k most-similar pairs, brute force (broadcast × fanout).
     * The exactness baseline and the per-bucket inner loop of an
     * LSH/IVF layout at scale. `simRound` rounds similarities BEFORE
@@ -33,11 +85,8 @@ object Similarity {
     val a = fanout(df).select(col(idCol).as("id1"), col(vecCol).as("_e1"))
     val b = df.select(col(idCol).as("id2"), col(vecCol).as("_e2"))
     val sim = cos(col("_e1"), col("_e2"))
-    a.join(broadcast(b), col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
-      .orderBy(col("sim").desc, col("id1"), col("id2"))
-      .limit(k)
+    topKPairs(a.join(broadcast(b), col("id1") < col("id2"))
+      .select(col("id1"), col("id2"), rounded(sim, simRound).as("sim")), k)
   }
 
   /** EXACT global top-k most-similar pairs through the cell-blocked
@@ -72,11 +121,8 @@ object Similarity {
     val a = vecs.select(col("_vid").as("id1"), col("_v").as("_va"), col("_cell"))
     val b = vecs.select(col("_vid").as("id2"), col("_v").as("_vb"), col("_cell"))
     val sim = cos(col("_va"), col("_vb"))
-    val localTopK = a.join(b, Seq("_cell")).filter(col("id1") < col("id2"))
-      .select(col("id1"), col("id2"),
-        simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
-      .orderBy(col("sim").desc, col("id1"), col("id2"))
-      .limit(k).collect()
+    val localTopK = topKPairs(a.join(b, Seq("_cell")).filter(col("id1") < col("id2"))
+      .select(col("id1"), col("id2"), rounded(sim, simRound).as("sim")), k).collect()
     val pairs =
       // < k cell-local pairs: emit everything. Sentinel -2.0 (strictly
       // below any cosine), NOT -1.0: with simRound=None the unrounded
@@ -87,7 +133,7 @@ object Similarity {
       else
         cellBlockedPairsCore(vecs, radii, centroids,
           localTopK.last.getDouble(2), simRound)
-    pairs.orderBy(col("sim").desc, col("id1"), col("id2")).limit(k)
+    topKPairs(pairs, k)
   }
 
   /** Late-interaction (ColBERT-style) MaxSim top-k: each stored vector
@@ -109,12 +155,8 @@ object Similarity {
     val q = df.filter(queryPred).select(col(idCol).as("qid"), col(vecCol).as("_qe"))
     val c = fanout(df).select(col(idCol).as("cid"), col(vecCol).as("_ce"))
     val raw = call_function("graft_maxsim", col("_qe"), col("_ce"), lit(m))
-    val w = Window.partitionBy("qid").orderBy(col("score").desc, col("cid").asc)
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("score", simRound.map(Canon.rk(raw, _)).getOrElse(raw))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "cid", "score", "rank")
+    topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid")), raw, k,
+      simRound, "score").select("qid", "cid", "score", "rank")
   }
 
   /** Top-k neighbors for each row matching `queryPred`. */
@@ -122,13 +164,8 @@ object Similarity {
       queryPred: Column, k: Int, simRound: Option[Int] = None): DataFrame = {
     val q = df.filter(queryPred).select(col(idCol).as("qid"), col(vecCol).as("_qe"))
     val c = fanout(df).select(col(idCol).as("cid"), col(vecCol).as("_ce"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(col("_qe"), col("_ce"))
-    c.join(broadcast(q), col("qid") =!= col("cid"))
-      .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "cid", "sim", "rank")
+    topKPerQuery(c.join(broadcast(q), col("qid") =!= col("cid")),
+      cos(col("_qe"), col("_ce")), k, simRound).select("qid", "cid", "sim", "rank")
   }
 
   /** PCA-prefiltered kNN: the corpus scanned in `pcaK`-dim PCA space
@@ -160,11 +197,7 @@ object Similarity {
       .withColumn("_d2", d2)
       .withColumn("_crn", row_number().over(wCoarse))
       .filter(col("_crn") <= shortlist)
-    val sim = cos(col("_qe"), col("_ce"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    short.withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topKPerQuery(short, cos(col("_qe"), col("_ce")), k, simRound)
       .select("qid", "cid", "sim", "rank")
   }
 
@@ -176,7 +209,7 @@ object Similarity {
     val sim = cos(col("_e1"), col("_e2"))
     a.join(broadcast(b), col("_g1") === col("_g2") && col("id1") < col("id2"))
       .select(col("id1"), col("id2"), col("_g1").as(groupCol),
-        simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
+        rounded(sim, simRound).as("sim"))
       .filter(col("sim") >= minSim)
   }
 
@@ -217,26 +250,36 @@ object Similarity {
     * cell and the angle to that centroid — the shared front half of
     * the cell-blocked operators. */
   private def assignCells(df: DataFrame, idCol: String, vecCol: String,
+      centroids: Array[Array[Float]]): DataFrame =
+    withCellAngle(fanout(df).select(col(idCol).as("_vid"), col(vecCol).as("_v")),
+      "_v", centroids)
+
+  /** `df` plus `_cell` (nearest centroid of `vecCol`) and `_ang` (the
+    * vector's angle to that centroid). */
+  private def withCellAngle(df: DataFrame, vecCol: String,
       centroids: Array[Array[Float]]): DataFrame = {
-    val cellOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, 1).head)
-    val angToCell = udf((v: Seq[Float], c: Int) =>
-      math.acos(math.max(-1.0, math.min(1.0, Kernels.cosineWith(v, centroids(c))))))
-    fanout(df).select(col(idCol).as("_vid"), col(vecCol).as("_v"))
-      .withColumn("_cell", cellOf(col("_v")))
-      .withColumn("_ang", angToCell(col("_v"), col("_cell")))
+    val angToCell = udf((v: Seq[Float], c: Int) => angleTo(v, centroids(c)))
+    df.withColumn("_cell", cellOf(centroids)(col(vecCol)))
+      .withColumn("_ang", angToCell(col(vecCol), col("_cell")))
   }
 
-  /** Per-cell angular radii, collected: bounded by the codebook
-    * (≤ |cells| rows, and the codebook already lives on the driver),
-    * so the cell-pair admission test can run driver-side. */
+  /** Per-cell angular radii of a (_cell, _ang) frame, collected:
+    * bounded by the codebook (≤ |cells| rows, and the codebook already
+    * lives on the driver), so the cell admission tests run driver-side. */
   private def collectRadii(vecs: DataFrame): Array[(Int, Double)] =
     vecs.groupBy("_cell").agg(max(col("_ang")).as("_rad"))
       .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1)
 
-  /** The blocked pair join over pre-assigned vectors: driver-side cell
-    * admission, broadcast allowed-pair equi-join, exact cosine filter.
-    * Taking (vecs, radii) lets a threshold descent reuse one cell
-    * layout across rungs instead of re-deriving it per threshold. */
+  /** The threshold angle of the cell-pruning cut. The output filter
+    * compares the ROUNDED sim to minSim, which admits true sims down to
+    * minSim − half an ulp of the rounding grid — the pruning bound must
+    * use that effective threshold or boundary pairs in tight cells
+    * would be silently dropped. */
+  private def thetaMax(minSim: Double, simRound: Option[Int]): Double = {
+    val effMin = minSim - simRound.map(k => 0.5 * math.pow(10.0, -k)).getOrElse(0.0)
+    math.acos(math.max(-1.0, math.min(1.0, effMin)))
+  }
+
   /** The triangle-inequality cell-pair admission test, factored out of
     * [[cellBlockedPairsCore]]: cell pair (a, b) is admitted iff the
     * MINIMUM possible angle between their members,
@@ -246,18 +289,12 @@ object Similarity {
   private def allowedCellPairs(radii: Array[(Int, Double)],
       centroids: Array[Array[Float]], minSim: Double,
       simRound: Option[Int]): Seq[(Int, Int)] = {
-    // the output filter compares the ROUNDED sim to minSim, which
-    // admits true sims down to minSim − half an ulp of the rounding
-    // grid — the pruning bound must use that effective threshold or
-    // boundary pairs in tight cells would be silently dropped
-    val effMin = minSim - simRound.map(k => 0.5 * math.pow(10.0, -k)).getOrElse(0.0)
-    val thetaMax = math.acos(math.max(-1.0, math.min(1.0, effMin)))
-    def centAng(a: Int, b: Int): Double =
-      math.acos(math.max(-1.0, math.min(1.0, Kernels.cosineWith(centroids(a).toSeq, centroids(b)))))
+    val theta = thetaMax(minSim, simRound)
     for {
       (ca, ra) <- radii.toSeq; (cb, rb) <- radii.toSeq
       if ca <= cb
-      if math.max(centAng(ca, cb) - ra - rb, 0.0) <= thetaMax + AngleEps
+      if math.max(angleTo(centroids(ca).toSeq, centroids(cb)) - ra - rb, 0.0) <=
+        theta + AngleEps
     } yield (ca, cb)
   }
 
@@ -272,13 +309,13 @@ object Similarity {
     allowedCellPairs(collectRadii(vecs), centroids, minSim, simRound)
   }
 
+  /** The blocked pair join over pre-assigned vectors: driver-side cell
+    * admission, broadcast allowed-pair equi-join, exact cosine filter.
+    * Taking (vecs, radii) lets a threshold descent reuse one cell
+    * layout across rungs instead of re-deriving it per threshold. */
   private def cellBlockedPairsCore(vecs: DataFrame, radii: Array[(Int, Double)],
       centroids: Array[Array[Float]], minSim: Double,
       simRound: Option[Int]): DataFrame = {
-    // the output filter compares the ROUNDED sim to minSim, which
-    // admits true sims down to minSim − half an ulp of the rounding
-    // grid — the pruning bound must use that effective threshold or
-    // boundary pairs in tight cells would be silently dropped
     val allowedPairs = allowedCellPairs(radii, centroids, minSim, simRound)
     val spark = vecs.sparkSession
     import spark.implicits._
@@ -291,7 +328,7 @@ object Similarity {
         || (col("_ca") === col("_cbAllowed") && col("_ida") < col("_idb"))))
       .select(least(col("_ida"), col("_idb")).as("id1"),
         greatest(col("_ida"), col("_idb")).as("id2"),
-        simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
+        rounded(sim, simRound).as("sim"))
       .filter(col("sim") >= minSim)
   }
 
@@ -328,14 +365,8 @@ object Similarity {
     * the loaded table via [[cosineProbePreparedCellIndex]]; the daily
     * ingest then never re-assigns the corpus. */
   def cellIndex(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: Array[Array[Float]]): DataFrame = {
-    val cellOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, 1).head)
-    val angToCell = udf((v: Seq[Float], c: Int) =>
-      math.acos(math.max(-1.0, math.min(1.0, Kernels.cosineWith(v, centroids(c))))))
-    fanout(corpus).select(col(idCol), col(vecCol))
-      .withColumn("_cell", cellOf(col(vecCol)))
-      .withColumn("_ang", angToCell(col(vecCol), col("_cell")))
-  }
+      centroids: Array[Array[Float]]): DataFrame =
+    withCellAngle(fanout(corpus).select(col(idCol), col(vecCol)), vecCol, centroids)
 
   /** Probe half: exact batch×corpus cosine ≥ minSim pairs against a
     * prepared (possibly loaded-from-disk) [[cellIndex]] table. Same
@@ -344,29 +375,23 @@ object Similarity {
   def cosineProbePreparedCellIndex(batch: DataFrame, index: DataFrame,
       idCol: String, vecCol: String, minSim: Double,
       centroids: Array[Array[Float]], simRound: Option[Int] = None): DataFrame = {
-    // same rounding-aware pruning bound as cosinePairsAboveCellBlocked:
-    // the rounded-sim output filter admits true sims half a grid step
-    // below minSim, so the triangle-inequality cut must too
-    val effMin = minSim - simRound.map(k => 0.5 * math.pow(10.0, -k)).getOrElse(0.0)
-    val thetaMax = math.acos(math.max(-1.0, math.min(1.0, effMin)))
+    val theta = thetaMax(minSim, simRound)
     val corp = index.select(col(idCol).as("_cid"), col(vecCol).as("_cv"),
       col("_cell"), col("_ang"))
     // per-cell radii are bounded by the (driver-resident) codebook, so
     // they ship inside the probe UDF: each batch vector explodes into
     // exactly the cells that can qualify — an equi-join on the cell id,
     // with no nested-loop batch × radii pass
-    val radii = corp.groupBy("_cell").agg(max(col("_ang")).as("_rad"))
-      .collect().map(r => (r.getInt(0), r.getDouble(1))).sortBy(_._1)
+    val radii = collectRadii(corp)
     val probeCells = udf((v: Seq[Float]) => radii.collect {
-      case (c, rad) if math.acos(math.max(-1.0, math.min(1.0,
-        Kernels.cosineWith(v, centroids(c))))) - rad <= thetaMax + AngleEps => c
+      case (c, rad) if angleTo(v, centroids(c)) - rad <= theta + AngleEps => c
     })
     val probes = fanout(batch).select(col(idCol).as("_bid"), col(vecCol).as("_bv"))
       .withColumn("_cell", explode(probeCells(col("_bv"))))
     val sim = cos(col("_bv"), col("_cv"))
     probes.join(corp.drop("_ang"), "_cell")
       .select(col("_bid").as("id1"), col("_cid").as("id2"),
-        simRound.map(Canon.rk(sim, _)).getOrElse(sim).as("sim"))
+        rounded(sim, simRound).as("sim"))
       .filter(col("sim") >= minSim)
   }
 
@@ -382,21 +407,12 @@ object Similarity {
   def ivfKnn(df: DataFrame, idCol: String, vecCol: String, queryPred: Column,
       k: Int, centroids: Array[Array[Float]], nprobe: Int,
       simRound: Option[Int] = None): DataFrame = {
-    val cellOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, 1).head)
-    val probesOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, nprobe))
-    val cands = fanout(df)
+    val cells = fanout(df)
       .select(col(idCol).as("cid"), col(vecCol).as("_ce"))
-      .withColumn("_cell", cellOf(col("_ce")))
-    val q = df.filter(queryPred)
-      .select(col(idCol).as("qid"), col(vecCol).as("_qe"))
-      .withColumn("_probe", explode(probesOf(col("_qe"))))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(col("_qe"), col("_ce"))
-    cands.join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
-      .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "cid", "sim", "rank")
+      .withColumn("_cell", cellOf(centroids)(col("_ce")))
+    val q = df.filter(queryPred).select(col(idCol).as("qid"), col(vecCol).as("_qe"))
+    topKPerQuery(ivfCandidates(cells, q, centroids, nprobe),
+      cos(col("_qe"), col("_ce")), k, simRound).select("qid", "cid", "sim", "rank")
   }
 
   /** Default predicted-recall target for [[routedNprobe]]. */
@@ -433,13 +449,11 @@ object Similarity {
     * the index ([[saveIvfIndex]] meta) — queries never pay for it. */
   def probeRecallLadder(df: DataFrame, idCol: String, vecCol: String,
       centroids: Array[Array[Float]], k: Int = 5,
-      nSamples: Int = LadderSamples): Array[Double] = {
-    val cellOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, 1).head)
+      nSamples: Int = LadderSamples): Array[Double] =
     probeRecallLadderAssigned(fanout(df)
         .select(col(idCol).as("_vid"), col(vecCol).as("_v"))
-        .withColumn("_cell", cellOf(col("_v"))),
+        .withColumn("_cell", cellOf(centroids)(col("_v"))),
       centroids, k, nSamples)
-  }
 
   /** [[probeRecallLadder]] over a PRE-ASSIGNED (_vid, _v, _cell) frame —
     * the shared-work form (r22): [[saveIvfIndex]] already computes the
@@ -448,9 +462,10 @@ object Similarity {
     * neither needs the calibration to re-run the assignment pass the
     * standalone entry pays. Same qids (hash-ordered bounded sample),
     * same all-cells truth join, same hit fold — the ladder is
-    * value-identical to the standalone form; the truth collect also
-    * carries the query/neighbor vectors, so the separate vector-fetch
-    * job the old form paid is gone. */
+    * value-identical to the standalone form. The truth pass is
+    * [[ivfKnn]]'s own candidate join and top-k cut at nprobe = |cells|,
+    * and its one collect carries each query's vector and each true
+    * neighbor's assigned cell — no separate vector-fetch job. */
   private def probeRecallLadderAssigned(assigned: DataFrame,
       centroids: Array[Array[Float]], k: Int = 5,
       nSamples: Int = LadderSamples): Array[Double] = {
@@ -460,39 +475,22 @@ object Similarity {
     val qids = assigned.select(col("_vid").cast("long").as("_qid"))
       .orderBy(md5(col("_qid").cast("string")), col("_qid"))
       .limit(nSamples).collect().map(_.getLong(0))
-    // truth: the ivfKnn join at nprobe = nCells (probe ALL cells) over
-    // the pre-assigned frame — no second corpus assignment pass
-    val probesOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, nCells))
+    // truth: ivfKnn at nprobe = nCells over the pre-assigned frame — no
+    // second corpus assignment pass
     val q = assigned.filter(col("_vid").isin(qids: _*))
       .select(col("_vid").as("qid"), col("_v").as("_qe"))
-      .withColumn("_probe", explode(probesOf(col("_qe"))))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(col("_qe"), col("_ce"))
-    val rows = assigned
-      .select(col("_vid").as("cid"), col("_v").as("_ce"), col("_cell"))
-      .join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
-      .withColumn("sim", sim)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("qid").cast("long"), col("cid").cast("long"),
-        col("_qe"), col("_ce"))
+    val cells = assigned.select(col("_vid").as("cid"), col("_v").as("_ce"), col("_cell"))
+    val rows = topKPerQuery(ivfCandidates(cells, q, centroids, nCells),
+        cos(col("_qe"), col("_ce")), k, None)
+      .select(col("qid").cast("long"), col("_qe"), col("_cell"))
       .collect()
-    val truth = rows.map(r => (r.getLong(0), r.getLong(1)))
-    val vecOf = collection.mutable.Map.empty[Long, Seq[Float]]
-    rows.foreach { r =>
-      vecOf(r.getLong(0)) = r.getSeq[Float](2)
-      vecOf(r.getLong(1)) = r.getSeq[Float](3)
-    }
-    val rankingOf = truth.map(_._1).distinct.map(q2 =>
-      q2 -> Kernels.nearestCells(vecOf(q2), centroids, nCells)).toMap
+    val rankingOf = rows.map(r => r.getLong(0) -> r.getSeq[Float](1)).toMap
+      .map { case (q2, v) => q2 -> Kernels.nearestCells(v, centroids, nCells) }
     val hits = new Array[Long](nCells)
-    truth.foreach { case (q2, n) =>
-      val nbrCell = Kernels.nearestCells(vecOf(n), centroids, 1).head
-      hits(rankingOf(q2).indexOf(nbrCell)) += 1L
-    }
+    rows.foreach(r => hits(rankingOf(r.getLong(0)).indexOf(r.getInt(2))) += 1L)
     val cum = hits.scanLeft(0L)(_ + _).tail
-    if (truth.isEmpty) Array.fill(nCells)(1.0)
-    else cum.map(_.toDouble / truth.length)
+    if (rows.isEmpty) Array.fill(nCells)(1.0)
+    else cum.map(_.toDouble / rows.length)
   }
 
   /** Probe-width ROUTING off the measured ladder — the
@@ -534,7 +532,6 @@ object Similarity {
     } catch { case _: java.io.IOException => () }
     graft.sources.Artifacts.saveCodebook(df.sparkSession, centroids,
       s"$path/codebook")
-    val cellOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, 1).head)
     // the assignment pass is PINNED and shared (r22): the cells write
     // and the ladder calibration both consume it, so the corpus pays
     // the nearest-cell UDF once, not twice (guide §5 reuse) — the
@@ -542,7 +539,7 @@ object Similarity {
     // assignment under the frozen codebook)
     val assigned = Checkpoints.pin(
       df.select(col(idCol).as("_vid"), col(vecCol).as("_v"))
-        .withColumn("_cell", cellOf(col("_v"))))
+        .withColumn("_cell", cellOf(centroids)(col("_v"))))
     graft.sources.Writers.writePartitioned(assigned, "_cell", s"$path/cells")
     // index manifest: the measured recall ladder rides with the index
     // so the routed probe ([[ivfKnnFromIndexRouted]]) reads an array
@@ -631,9 +628,8 @@ object Similarity {
     val spark = batch.sparkSession
     val centroids = graft.sources.Artifacts.loadCodebook(spark,
       s"$indexPath/codebook")
-    val cellOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, 1).head)
     batch.select(col(idCol).as("_vid"), col(vecCol).as("_v"))
-      .withColumn("_cell", cellOf(col("_v")))
+      .withColumn("_cell", cellOf(centroids)(col("_v")))
       .write.mode("append").partitionBy("_cell").parquet(s"$indexPath/cells")
   }
 
@@ -650,19 +646,6 @@ object Similarity {
     ids.select(col(idCol).as("_vid"))
       .write.mode("append").parquet(s"$indexPath/tombstones")
 
-  /** Probe a [[saveIvfIndex]] layout COLD: reload the codebook from
-    * its parquet table, route each query to its `nprobe` nearest
-    * cells, and join against the per-cell directories. Identical
-    * output to [[ivfKnn]] over the same corpus/codebook (unit-tested
-    * bitwise in NoOracleSpec) — the probe-side cosine is the same
-    * codegen kernel and the candidate set is the same cell equi-join;
-    * only the index side now comes from disk. The scan is eligible
-    * for dynamic partition pruning: the probed cell ids reach the
-    * file index, so unprobed cells' directories are never opened.
-    * If the index carries [[ivfDelete]] tombstones they are applied
-    * here as a BROADCAST anti-join (the tombstone table is bounded by
-    * deletes, never by corpus) — no exchange lands on the cells scan,
-    * and an index without tombstones planes exactly as before. */
   /** The index's LIVE content: the cells layout minus tombstoned ids.
     * No .distinct() on the tombstone side: an anti-join ignores
     * build-side duplicates, and the distinct would be an extra
@@ -680,25 +663,30 @@ object Similarity {
     else cellsRaw
   }
 
+  /** Probe a [[saveIvfIndex]] layout COLD: reload the codebook from
+    * its parquet table, route each query to its `nprobe` nearest
+    * cells, and join against the per-cell directories. Identical
+    * output to [[ivfKnn]] over the same corpus/codebook (unit-tested
+    * bitwise in NoOracleSpec) — the probe-side cosine is the same
+    * codegen kernel and the candidate set is the same cell equi-join;
+    * only the index side now comes from disk. The scan is eligible
+    * for dynamic partition pruning: the probed cell ids reach the
+    * file index, so unprobed cells' directories are never opened.
+    * If the index carries [[ivfDelete]] tombstones they are applied
+    * here as a BROADCAST anti-join (the tombstone table is bounded by
+    * deletes, never by corpus) — no exchange lands on the cells scan,
+    * and an index without tombstones planes exactly as before. */
   def ivfKnnFromIndex(queries: DataFrame, idCol: String, vecCol: String,
       indexPath: String, k: Int, nprobe: Int,
       simRound: Option[Int] = None): DataFrame = {
     val spark = queries.sparkSession
     val centroids = graft.sources.Artifacts.loadCodebook(spark,
       s"$indexPath/codebook")
-    val probesOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, nprobe))
-    val live = liveCells(spark, indexPath)
-    val cands = live
+    val cells = liveCells(spark, indexPath)
       .select(col("_vid").as("cid"), col("_v").as("_ce"), col("_cell"))
     val q = queries.select(col(idCol).as("qid"), col(vecCol).as("_qe"))
-      .withColumn("_probe", explode(probesOf(col("_qe"))))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    val sim = cos(col("_qe"), col("_ce"))
-    cands.join(broadcast(q), col("_cell") === col("_probe") && col("qid") =!= col("cid"))
-      .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "cid", "sim", "rank")
+    topKPerQuery(ivfCandidates(cells, q, centroids, nprobe),
+      cos(col("_qe"), col("_ce")), k, simRound).select("qid", "cid", "sim", "rank")
   }
 
   /** Random-hyperplane LSH approximate kNN — the DATA-INDEPENDENT
@@ -762,14 +750,10 @@ object Similarity {
       .select(col("qid"), col("_qe"), col("_qsig"),
         posexplode(col("_qsig")).as(Seq("_qt", "_qh")))
     val firstTable = call_function("graft_first_eq", col("_sig"), col("_qsig"))
-    val sim = cos(col("_qe"), col("_ce"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    data.join(broadcast(q), col("_t") === col("_qt") && col("_h") === col("_qh")
+    val cands = data.join(broadcast(q), col("_t") === col("_qt") && col("_h") === col("_qh")
         && col("qid") =!= col("cid"))
       .filter(firstTable === col("_t") + 1)
-      .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
+    topKPerQuery(cands, cos(col("_qe"), col("_ce")), k, simRound)
       .select("qid", "cid", "sim", "rank")
   }
 
@@ -953,8 +937,6 @@ object Similarity {
     require(k >= 1 && rerank >= k,
       s"need rerank >= k >= 1, got k=$k rerank=$rerank")
     val ks = books(0).length
-    val cellOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, 1).head)
-    val probesOf = udf((v: Seq[Float]) => Kernels.nearestCells(v, centroids, nprobe))
     // RESIDUAL encoding (the standard IVF-PQ composition): codes
     // quantize x − c(cell), not x — raw-vector codes collapse to the
     // cell id on clustered corpora (all members share the centroid
@@ -974,7 +956,7 @@ object Similarity {
     // corpus side of the ADC scan: codes + true norm, NO raw vectors
     val codes = fanout(df)
       .select(col(idCol).as("cid"), col(vecCol).as("_ce"))
-      .withColumn("_cell", cellOf(col("_ce")))
+      .withColumn("_cell", cellOf(centroids)(col("_ce")))
       .select(col("cid"), col("_cell"),
         encodeOf(col("_ce"), col("_cell")).as("_codes"),
         Kernels.l2norm(col("_ce")).as("_cn"))
@@ -985,7 +967,7 @@ object Similarity {
       .select(col(idCol).as("qid"), col(vecCol).as("_qe"))
       .withColumn("_lut", lutOf(col("_qe")))
       .withColumn("_qn", Kernels.l2norm(col("_qe")))
-      .withColumn("_probe", explode(probesOf(col("_qe"))))
+      .withColumn("_probe", explode(probesOf(centroids, nprobe)(col("_qe"))))
       .withColumn("_qc", qcOf(col("_qe"), col("_probe")))
     val wAdc = Window.partitionBy("qid").orderBy(col("_adc").desc, col("cid").asc)
     // zero-norm guard: NaN sorts ABOVE all doubles descending, so an
@@ -1004,13 +986,8 @@ object Similarity {
     // exact re-rank: fetch the shortlist's raw vectors by id (selective
     // equi-join, rerank·|queries| rows) and order by the codegen cosine
     val cand = df.select(col(idCol).as("cid"), col(vecCol).as("_ce"))
-    val sim = cos(col("_qe"), col("_ce"))
-    val w = Window.partitionBy("qid").orderBy(col("sim").desc, col("cid").asc)
-    cand.join(broadcast(shortlist), "cid")
-      .withColumn("sim", simRound.map(Canon.rk(sim, _)).getOrElse(sim))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select("qid", "cid", "sim", "rank")
+    topKPerQuery(cand.join(broadcast(shortlist), "cid"), cos(col("_qe"), col("_ce")),
+      k, simRound).select("qid", "cid", "sim", "rank")
   }
 
   /** The `sampleSize` vectors with the smallest (md5(id), id) keys —

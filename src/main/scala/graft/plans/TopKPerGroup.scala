@@ -130,17 +130,14 @@ case class TopKPerGroupExec(
   * rank semantics, output attributes (same exprIds), and values are
   * identical; everything else keeps the stock Window plan.
   *
-  * Guard rails (the exec holds one k-heap per group in memory with no
-  * spill path, so groups·k rows must fit an executor): the rewrite is
-  * gated on `spark.graft.topk.enabled` (default true) and fires only
-  * for k ≤ `spark.graft.topk.maxK` (default 100000) — above that, or
-  * with the flag off, the query keeps the stock sort-and-spill Window,
-  * trading speed for the spill path. Group cardinality is not knowable
-  * at rewrite time; the conf pair is the explicit escape hatch for
-  * high-cardinality workloads. */
+  * Guard rail (the exec holds one k-heap per group in memory with no
+  * spill path, so groups·k rows must fit an executor): the rewrite
+  * fires only for k ≤ `spark.graft.topk.maxK` (default 100000) — above
+  * that the query keeps the stock sort-and-spill Window, trading speed
+  * for the spill path, and `maxK=0` turns the rewrite off. Group
+  * cardinality is not knowable at rewrite time; the cap is the
+  * explicit escape hatch for high-cardinality workloads. */
 object TopKRewrite extends Rule[LogicalPlan] {
-  private def enabled: Boolean =
-    conf.getConfString("spark.graft.topk.enabled", "true").toBoolean
   // clamp to Int.MaxValue: the limit flows into TopKPerGroup's Int k,
   // so a huge configured cap must not make limit.toInt wrap negative
   private def maxK: Long =
@@ -162,8 +159,7 @@ object TopKRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabled) plan
-    else plan.transformUp {
+    plan.transformUp {
       case org.apache.spark.sql.catalyst.plans.logical.Filter(
             LessThanOrEqual(attr: Attribute, IntLike(limit)),
             w: org.apache.spark.sql.catalyst.plans.logical.Window)

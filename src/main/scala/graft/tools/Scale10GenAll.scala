@@ -9,9 +9,13 @@ import org.apache.spark.sql.functions._
   * writes replica-salted copies of every table the scale-benched key
   * families read:
   *
-  *  - `documents`: token-salted exactly like [[Scale10Gen]] (replica k
-  *    prefixes every token with r{k}x, doc_id += k·10⁹) — replicas
-  *    share no vocabulary and no near-dup pairs.
+  *  - `documents`: token-salted — replica k prefixes every token with
+  *    r{k}x, doc_id += k·10⁹, and n_chars is recomputed on the salted
+  *    text — so replicas share no vocabulary and no near-dup pairs:
+  *    true pairs, candidates and clusters grow exactly `replicas`×
+  *    (naive replication would make every replica of a doc match
+  *    every replica of its duplicates). `replicas = 1` is the salted
+  *    single-replica baseline the char-n-gram keys compare against.
   *  - `embeddings`: vec_id += k·10⁹; replica k's vectors are rotated
   *    by k positions and sign-flipped by a deterministic per-(k, dim)
   *    pattern — an orthogonal transform, so every replica's INTERNAL

@@ -100,8 +100,24 @@ class PlanShapeSpec extends AnyFunSuite {
     ("ml_crossval_linreg", "BroadcastHashJoin",
       "the k-row coefficient table broadcasts back for held-out scoring"),
     ("text_bpe_merge_candidates", "TakeOrderedAndProject",
-      "top-20 merge candidates via bounded heap, never a full bigram sort")
+      "top-20 merge candidates via bounded heap, never a full bigram sort"),
+    ("sim_maxsim_multivector", "TopKPerGroup",
+      "the MaxSim per-query rank takes the bounded-heap operator"),
+    ("sim_knn_pca", "TopKPerGroup",
+      "the coarse shortlist and the exact re-rank take the bounded-heap operator"),
+    ("sim_knn_ivf", "TopKPerGroup",
+      "the IVF probe's per-query rank takes the bounded-heap operator"),
+    ("sim_knn_ivf_persisted", "TopKPerGroup",
+      "the cold index probe keeps the in-memory IVF ranking shape"),
+    ("sim_knn_ivf_upsert", "TopKPerGroup",
+      "the probe over an upserted index keeps the IVF ranking shape")
   )
+
+  test("sim_knn_pca plans two top-k cuts: the coarse shortlist and the final rank") {
+    val cuts = SparkEntry.queries("sim_knn_pca")(TestSpark.spark, TestSpark.sf0001)
+      .queryExecution.optimizedPlan.collect { case t: graft.plans.TopKPerGroup => t.k }
+    assert(cuts.size == 2, s"expected 2 TopKPerGroup cuts, got k = $cuts")
+  }
 
   test("ml_crossval_linreg: one fact scan per pass — the stats branch is pinned") {
     val s = TestSpark.spark

@@ -10,8 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * operator does not implement must keep the stock Window plan AND
   * produce results identical to a session without the extension — so
   * the custom-plan path stays safe as user queries and Spark's own
-  * bindings evolve. Plus the conf escape hatches (enabled / maxK) that
-  * bound the exec's groups·k in-memory footprint. */
+  * bindings evolve. Plus the conf escape hatch (maxK) that bounds the
+  * exec's groups·k in-memory footprint. */
 class TopKRewriteSpec extends AnyFunSuite {
   private val sf = TestSpark.sf0001
 
@@ -98,13 +98,13 @@ class TopKRewriteSpec extends AnyFunSuite {
     } finally s.conf.unset("spark.graft.topk.maxK")
   }
 
-  test("spark.graft.topk.enabled=false disables the rewrite entirely") {
+  test("spark.graft.topk.maxK=0 disables the rewrite entirely") {
     val s = TestSpark.spark
-    s.conf.set("spark.graft.topk.enabled", "false")
+    s.conf.set("spark.graft.topk.maxK", "0")
     try {
       val df = Tables.orders(s, sf)
         .withColumn("rn", row_number().over(w)).filter(col("rn") <= 3)
       assert(!plan(df).contains("TopKPerGroup"), "rewrite fired while disabled")
-    } finally s.conf.unset("spark.graft.topk.enabled")
+    } finally s.conf.unset("spark.graft.topk.maxK")
   }
 }
